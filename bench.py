@@ -1,197 +1,16 @@
-#!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE compact JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec for the 12 slowest}, "n_queries": N,
-"skip_ratios": {...}, "sf": ...}. The FULL per-query map plus the
-pruning micro-benchmarks goes to BENCH_DETAIL.json beside this script
-(the printed line is capped at 1500 chars so the driver's bounded
-stdout capture always parses it).
+"""Host drift helpers: CPU tick samples from /proc/stat and the
+steal/busy share of the interval between two of them.
 
-Each query executes end-to-end into Spark's no-op sink (full plan runs,
-nothing collected to the driver). One warmup of the flagship query
-amortizes JVM/codegen startup, mirroring BASELINE.md's 1-warmup
-protocol.
+perfbench's host probe (perfbench/metrics.py) imports these to record
+how much CPU time the hypervisor stole while a run was measured.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "q01_pricing_summary",
-    "q02_filter_project",
-    "q10_join_broadcast_star",
-    "q15_star_revenue_by_region",
-    "q17_asof_join",
-    "q20_window_topk_per_group",
-    "q19_subqueries",
-    "q33_sessionize",
-    "q50_dedup_exact",
-    "q52_minhash_lsh",
-    "q56_dedup_components",
-    "q67_deterministic_split",
-    "q77_decontamination",
-    "q79_repetition_quality",
-    "q85_shingle_dup_frac",
-    "q87_bm25_search",
-    "q91_hybrid_retrieval",
-    "q71_sequence_packing",
-    "q54_embedding_neardup",
-    "q60_cosine_topk",
-    "q62_ann_lsh",
-    "q70_colf_roundtrip",
-    "q137_colf_v2_roundtrip",
-    "q153_colf_v3_striped",
-    "q73_csv_ingest",
-    "q80_stream_tumbling",
-    "q84_stream_stream_join",
-    "q90_training_pipeline",
-    "q95_gapfill_locf",
-    "q97_interval_overlap",
-    "q99_sliding_window_batch",
-    "q103_tpch_q3",
-    "q104_tpch_q7",
-    "q106_data_quality_audit",
-    "q152_table_profile",
-    "q154_table_profile_sketch",
-    "q107_incremental_agg",
-    "q114_pii_redaction",
-    "q117_percentile_exact",
-    "q119_rare_bigram_score",
-    "q120_graph_triangles",
-    "q121_strict_funnel",
-    "q124_tpch_q5",
-    "q125_tpch_q10",
-    "q126_tpch_q18",
-    "q140_tpch_q8",
-    "q143_tpch_q16",
-    "q146_tpch_q21",
-    "q116_doc_chunking",
-    "q129_dedup_verified_pairs",
-    "q131_image_resize",
-    "q132_negative_sampling",
-    "q135_ann_recall",
-    "q151_knn_label",
-    "q150_oov_rate",
-    "q112_colf_compact",
-    "q122_colf_time_travel",
-    "q134_colf_incremental_read",
-    "q136_colf_vacuum",
-    "q148_colf_delete",
-    "q149_colf_merge",
-    "q155_colf_v3_cow",
-    "q156_bucketed_join",
-    "q157_zorder_pruning",
-    "q158_heavy_hitters",
-    "q159_stream_outer_join",
-    "q160_schema_evolution",
-    "q164_colf_bloom_lookup",
-    "q165_ann_pq",
-    "q166_ann_ivfpq",
-    "q167_colf_targeted_delete",
-    "q168_ann_index_colf",
-    # round-6 additions
-    "q169_zorder_rank",
-    "q170_colf_size_compact",
-    "q171_colf_partitioned",
-    "q172_metadata_profile",
-    "q173_colf_bounds_merge",
-    "q174_partition_stats",
-    # round-7 additions: the TPC-H suite completers + spec/transform tier
-    "q175_tpch_q2",
-    "q176_tpch_q11",
-    "q177_tpch_q12",
-    "q178_tpch_q20",
-    "q179_colf_spec_evolution",
-    "q180_colf_bucket_transform",
-    "q181_partition_stats_evolved",
-    "q182_colf_sorted_maintenance",
-    "q183_colf_snapshot_diff",
-    # round-8 additions: the CDC/refs tier
-    "q184_colf_changelog",
-    "q185_colf_tag_read",
-    "q186_colf_wap",
-    "q187_colf_branch",
-    "q188_colf_update",
-    "q189_colf_clustered_maintenance",
-    "q190_embedding_pca",
-    "q191_exact_substring_dedup",
-    "q192_ann_pca",
-    "q193_multimodal_ppm",
-    "q194_multimodal_wav",
-    # round-9 additions: merge-on-read deletes + semantic dedup
-    "q195_colf_mor_delete",
-    "q196_semantic_dedup",
-    "q197_colf_mor_update",
-    "q198_colf_eq_delete",
-    "q199_colf_mor_merge",
-    # round-10 additions: CDC, table-format completeness, cheap
-    # maintenance, sequence packing
-    "q200_colf_cdc_stream",
-    "q201_colf_rewrite_deletes",
-    "q202_colf_schema_evolution",
-    "q203_colf_sql_surface",
-    "q204_multimodal_y4m",
-    "q206_colf_orphan_cleanup",
-    "q207_colf_metadata_tables",
-    "q208_colf_check_constraints",
-    "q209_colf_binpack",
-    "q210_sequence_packing",
-    "q211_colf_ndv_stats",
-    "q212_colf_cdf_replay",
-    # round-11 additions: sharded metadata-log migration +
-    # stats-driven maintenance planning
-    "q213_colf_metadata_migration",
-    "q214_colf_stats_planning",
-    # round-12 additions: metadata-log compaction + the PNG codec
-    "q215_colf_log_compaction",
-    "q216_multimodal_png",
-    # round-13 addition: the baseline JPEG codec
-    "q217_multimodal_jpeg",
-]
-
-
-def _host_calibration() -> dict:
-    """Drift control (round-12 verdict item #8): a deterministic
-    single-threaded CPU probe (zlib over a fixed pseudo-random 16 MB
-    buffer + one 768^2 matmul, min of 3) plus the 1-minute load
-    average, recorded at bench START and END. Rounds 10-12 each saw
-    >30% per-query inflation that only a manual interleaved git-
-    archive A/B could refute as host drift; with this, a headline
-    delta that tracks the probe delta is drift by the artifact's own
-    evidence, and only probe-flat deltas need an A/B."""
-    import zlib
-
-    import numpy as np
-
-    rng = np.random.default_rng(13)
-    blob = rng.integers(0, 256, 16 << 20, dtype=np.uint8).tobytes()
-    a = rng.standard_normal((768, 768))
-
-    def one() -> float:
-        t0 = time.perf_counter()
-        zlib.compress(blob, 6)
-        (a @ a).sum()
-        return time.perf_counter() - t0
-
-    one()  # warm the allocator/caches like every other measurement
-    probe = round(min(one(), one(), one()), 4)
-    try:
-        load1 = round(os.getloadavg()[0], 2)
-    except OSError:
-        load1 = None
-    return {"cpu_probe_sec": probe, "loadavg_1m": load1}
-
 
 def _cpu_ticks() -> list[int] | None:
     """Aggregate /proc/stat CPU ticks (user nice system idle iowait
-    irq softirq steal) — a free per-query drift sample."""
+    irq softirq steal), or None where /proc/stat is unreadable."""
     try:
         with open("/proc/stat") as fh:
             parts = fh.readline().split()
@@ -202,9 +21,8 @@ def _cpu_ticks() -> list[int] | None:
 
 def _cpu_drift(a, b) -> dict:
     """Steal/busy percentages of the interval between two tick
-    samples. steal_pct is hypervisor time stolen from this VM —
-    the direct signature of the 30-70% per-query inflation rounds
-    10-13 kept re-litigating by hand."""
+    samples. steal_pct is hypervisor time stolen from this VM: a
+    latency change that tracks it is the host's, not the code's."""
     if not a or not b:
         return {}
     d = [y - x for x, y in zip(a, b)]
@@ -213,562 +31,3 @@ def _cpu_drift(a, b) -> dict:
         return {}
     return {"steal_pct": round(100 * d[7] / tot, 2),
             "busy_pct": round(100 * (tot - d[3] - d[4]) / tot, 2)}
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    host_start = _host_calibration()
-    from columnar_format_spark.session import get_spark
-    import columnar_format_spark.queries  # noqa: F401
-    from columnar_format_spark.registry import QUERIES
-
-    spark = get_spark(app_name="bench")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-
-    def run(name: str, at: str = sf_dir) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name].fn(spark, at).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        # Streaming queries drain into driver-memory sink tables; once
-        # the noop write has consumed a result, drop its view so ~44
-        # runs don't accumulate row arrays in the driver and skew later
-        # timings with GC pressure.
-        for t in spark.catalog.listTables():
-            if t.name.startswith("q_") and t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-        # The ANN queries localCheckpoint shared subtrees; their blocks
-        # are reclaimed by ContextCleaner only after py4j releases the
-        # RDD handles — collect the Python-side references now (outside
-        # the timed region) so ~360 runs don't pool checkpoint blocks
-        # in the 8g driver.
-        import gc
-        gc.collect()
-        return dt
-
-    # Per-query warmup immediately before its timed run (mirrors
-    # BASELINE.md's 1-warmup + timed-reps protocol,
-    # bench_selective_vs_csv.py:37-51 — the reference also warms and
-    # times the SAME operation consecutively). The warmup pays JVM
-    # whole-stage-codegen JIT, Python worker pool spin-up, stream
-    # staging, and page-cache fill for that query. Pairing matters:
-    # the codegen class cache holds ~100 entries, so a warm-ALL-then-
-    # time-ALL loop evicts early queries' compiled stages before their
-    # timed run and re-JITs (~2-3 s/query of pure compiler time, which
-    # on a real cluster is a once-per-executor cost, not a query cost).
-    # 1 warmup + 2 timed reps, report the min (BASELINE.md's in-process
-    # protocol uses min-of-N for the same reason: GC/page-cache noise
-    # on a shared box only ever ADDS time, so min is the stable
-    # estimator of the query's true cost).
-    times = {}
-    query_host = {}
-    for name in HEADLINE:
-        run(name)
-        t0 = _cpu_ticks()
-        times[name] = round(min(run(name), run(name)), 4)
-        h = _cpu_drift(t0, _cpu_ticks())
-        try:
-            h["load1"] = round(os.getloadavg()[0], 2)
-        except OSError:
-            pass
-        query_host[name] = h
-    total = round(sum(times.values()), 4)
-    # Round-13 verdict item #3: the bench must CONSUME its drift
-    # control, not just record endpoints — query_host samples
-    # /proc/stat across each query's timed reps, and drift_suspects
-    # names the queries whose own timed window saw hypervisor steal,
-    # so a per-query regression label can be checked against the
-    # box's state during THAT measurement instead of a whole-run
-    # probe delta.
-    drift_suspects = sorted(
-        q for q, h in query_host.items() if h.get("steal_pct", 0) > 5)
-    detail = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": times,
-        "query_host": query_host,
-        "drift_suspects": drift_suspects,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "colf_pruning": bench_colf_pruning(spark, sf_dir),
-        "colf_stripe_pruning": bench_colf_stripe_pruning(spark, sf_dir),
-        "colf_compact_stripes": bench_colf_compact_stripes(spark, sf_dir),
-        "colf_bloom": bench_colf_bloom(spark, sf_dir),
-        "colf_float_pruning": bench_colf_float_pruning(spark, sf_dir),
-        "colf_float_bloom": bench_colf_float_bloom(spark, sf_dir),
-        "colf_prefix_bloom": bench_colf_prefix_bloom(spark, sf_dir),
-        "colf_bloom_write_cost": bench_colf_bloom_write_cost(spark, sf_dir),
-        "host": {"start": host_start, "end": _host_calibration(),
-                 "cpus": os.cpu_count()},
-    }
-    # Full per-query map + pruning micro-benches to a sibling file; the
-    # PRINTED line must stay compact — the driver records only a bounded
-    # tail of stdout, and rounds 5/6 lost the whole artifact
-    # (`parsed: null`) because the 79-query line overflowed it.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1)
-    slowest = dict(sorted(times.items(), key=lambda kv: -kv[1])[:12])
-    line = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": slowest,  # 12 slowest; full map in BENCH_DETAIL.json
-        "n_queries": len(times),
-        "sf": detail["sf"],
-        "skip_ratios": {
-            "zone": detail["colf_pruning"]["skip_ratio"],
-            "stripe": detail["colf_stripe_pruning"]["stripe_skip_ratio"],
-            "bloom": detail["colf_bloom"]["skip_ratio"],
-            "float": detail["colf_float_pruning"]["skip_ratio"],
-            "float_bloom": detail["colf_float_bloom"]["skip_ratio"],
-            "prefix": detail["colf_prefix_bloom"]["skip_ratio"],
-            "bloom_write_cost":
-                detail["colf_bloom_write_cost"]["bloom_write_overhead"],
-        },
-        "host": detail["host"],
-        "detail": "BENCH_DETAIL.json",
-    }
-    out = json.dumps(line, separators=(",", ":"))
-    # the driver records only a bounded stdout tail — degrade gracefully
-    # by shrinking the slowest-N list rather than aborting after every
-    # query already ran (an assert here would lose the whole artifact)
-    n_slow = 12
-    while len(out) > 1500 and n_slow > 0:
-        n_slow -= 1
-        line["queries"] = dict(
-            sorted(times.items(), key=lambda kv: -kv[1])[:n_slow])
-        out = json.dumps(line, separators=(",", ":"))
-    print(out)
-    spark.stop()
-
-
-def bench_colf_pruning(spark, sf_dir: str) -> dict:
-    """Measure what the zone-map sidecar actually saves: the q76
-    key-range aggregation over the range-partitioned COLF dataset,
-    once with manifest pruning (opens 1-2 of 8 files) and once with
-    option pruning=off (opens all 8).  Same filter, same result —
-    only the I/O differs, which is the format's selective-scan claim
-    extended from columns (q75) to files."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from columnar_format_spark.colf.datasource import (
-        ColfReader, load_manifest)
-    from columnar_format_spark.colf.roundtrip import _stage_lineitem_colf
-
-    d = _stage_lineitem_colf(spark, sf_dir)
-
-    def agg_time(pruning: str) -> float:
-        def one() -> float:
-            df = (spark.read.format("colf").option("pruning", pruning)
-                  .load(d).filter(F.col("l_orderkey").between(1000, 2000)))
-            t0 = _t.perf_counter()
-            df.agg(F.count(F.lit(1)), F.sum("l_linenumber")).collect()
-            return _t.perf_counter() - t0
-        one()  # warmup
-        return round(min(one(), one()), 4)
-
-    # planned partitions with the pushed filter, straight from the reader
-    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
-    r = ColfReader({"path": d}, None)
-    r.pushFilters([GreaterThanOrEqual(("l_orderkey",), 1000),
-                   LessThanOrEqual(("l_orderkey",), 2000)])
-    # exclude the None-file sentinel partition (emitted when pruning
-    # eliminates every file) so a full skip reports 0 opened, not 1
-    opened = len([p for p in r.partitions() if p.file is not None])
-    total_files = len(load_manifest(d)) or opened
-    return {
-        "pruned_sec": agg_time("on"),
-        "unpruned_sec": agg_time("off"),
-        "files_opened": opened,
-        "files_total": total_files,
-        "skip_ratio": round(1 - opened / total_files, 4) if total_files else 0.0,
-    }
-
-
-def bench_colf_stripe_pruning(spark, sf_dir: str) -> dict:
-    """v3's claim in numbers: ONE part file, many stripes — the planner
-    must (a) produce one task per stripe (intra-file parallelism) and
-    (b) open only the stripes whose zone maps cover a key-range
-    filter (intra-file pruning). Reported straight from the reader's
-    partition planning plus a timed pruned-vs-unpruned aggregate."""
-    import os as _os
-    from columnar_format_spark.staging import run_dir
-    import time as _t
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
-
-    from columnar_format_spark.colf.datasource import ColfReader, register
-    from columnar_format_spark.registry import table
-
-    register(spark)
-    d = run_dir(("bench-stripe", sf_dir), "colf_stripe_bench_") + "/ds"
-    li = table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").cast("int").alias("l_orderkey"),
-        F.col("l_linenumber").alias("l_linenumber"),
-    ).orderBy("l_orderkey").coalesce(1)
-    (li.write.format("colf").option("version", "3")
-     .option("stripeRows", "50000").mode("append").save(d))
-
-    r_all = ColfReader({"path": d}, None)
-    stripes_total = len(r_all.partitions())
-    r = ColfReader({"path": d}, None)
-    r.pushFilters([GreaterThanOrEqual(("l_orderkey",), 1000),
-                   LessThanOrEqual(("l_orderkey",), 2000)])
-    opened = len([p for p in r.partitions() if p.file is not None])
-
-    def agg_time(pruning: str) -> float:
-        def one() -> float:
-            df = (spark.read.format("colf").option("pruning", pruning)
-                  .load(d).filter(F.col("l_orderkey").between(1000, 2000)))
-            t0 = _t.perf_counter()
-            df.agg(F.count(F.lit(1)), F.sum("l_linenumber")).collect()
-            return _t.perf_counter() - t0
-        one()
-        return round(min(one(), one()), 4)
-
-    return {
-        "n_part_files": len([f for f in _os.listdir(d)
-                             if f.endswith(".colf")]),
-        "stripes_total": stripes_total,
-        "stripes_opened": opened,
-        "stripe_skip_ratio": round(1 - opened / stripes_total, 4)
-        if stripes_total else 0.0,
-        "pruned_sec": agg_time("on"),
-        "unpruned_sec": agg_time("off"),
-    }
-
-
-def bench_colf_compact_stripes(spark, sf_dir: str) -> dict:
-    """Stripe-aware compaction in numbers: a many-small-file v3
-    dataset compacts into ONE part file that still plans one task per
-    stripe (compact() carries the manifest's mean stripe rows into the
-    rewrite), with scan time before/after — consolidation must not
-    cost parallelism."""
-    import os as _os
-    from columnar_format_spark.staging import run_dir
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from columnar_format_spark.colf.datasource import ColfReader, register
-    from columnar_format_spark.colf.maintenance import compact
-    from columnar_format_spark.registry import table
-
-    register(spark)
-    d = run_dir(("bench-compact", sf_dir), "colf_compact_bench_") + "/ds"
-    li = table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").cast("int").alias("l_orderkey"),
-        F.col("l_linenumber").alias("l_linenumber"),
-    )
-    (li.repartition(16).write.format("colf").option("version", "3")
-     .option("stripeRows", "50000").mode("append").save(d))
-
-    def scan_time() -> float:
-        def one() -> float:
-            df = spark.read.format("colf").load(d)
-            t0 = _t.perf_counter()
-            df.agg(F.count(F.lit(1)), F.sum("l_linenumber")).collect()
-            return _t.perf_counter() - t0
-        one()
-        return round(min(one(), one()), 4)
-
-    files_before = len([f for f in _os.listdir(d) if f.endswith(".colf")])
-    t_before = scan_time()
-    # size-targeted pass first (the maintenance-job form): roll the 16
-    # small files into ~quarter-of-total sized balanced files
-    from columnar_format_spark.colf.datasource import live_files
-    total_bytes = sum(_os.path.getsize(f) for f in live_files(d))
-    compact(spark, d, target_file_bytes=max(1, total_bytes // 4))
-    sized = sorted(_os.path.getsize(f) for f in live_files(d))
-    sized_files = len(sized)
-    sized_balance = round(sized[-1] / sized[0], 3) if sized[0] else 0.0
-    compact(spark, d, 1)
-    files_after = len([f for f in _os.listdir(d) if f.endswith(".colf")])
-    tasks_after = len(ColfReader({"path": d}, None).partitions())
-    t_after = scan_time()
-    return {
-        "files_before": files_before,
-        "sized_files": sized_files,
-        "sized_balance_max_over_min": sized_balance,
-        "files_after": files_after,
-        "tasks_after": tasks_after,
-        "scan_sec_before": t_before,
-        "scan_sec_after": t_after,
-    }
-
-
-
-
-def bench_colf_bloom(spark, sf_dir: str) -> dict:
-    """What the Bloom sidecar saves on the access pattern zone maps
-    cannot serve: a point lookup on a hash-scattered (unclustered) key.
-    Every file's min/max covers the probe, so zone-map pruning opens
-    all files; the per-file blooms open ~1. Reported straight from the
-    reader's partition planning plus a timed pruned-vs-unpruned
-    lookup."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import EqualTo
-
-    from columnar_format_spark.colf.datasource import ColfReader
-
-    # q164's staging (stage_once-keyed, shared with the query run)
-    from columnar_format_spark.staging import stage_once
-    from columnar_format_spark.registry import table as _table
-
-    def write(d: str) -> None:
-        (_table(spark, sf_dir, "orders")
-         .select(F.col("o_orderkey").cast("int").alias("o_orderkey"),
-                 "o_orderpriority", "o_totalprice")
-         .repartition(8)
-         .write.format("colf").option("bloomColumns", "o_orderkey")
-         .mode("overwrite").save(d + "/ds"))
-
-    d = stage_once(("colf-bloom", sf_dir), "colf_bloom_", write) + "/ds"
-    df = spark.read.format("colf").load(d)
-    probe = int(df.agg(F.min("o_orderkey")).collect()[0][0])
-
-    def planned(pruning: str) -> int:
-        r = ColfReader({"path": d, "pruning": pruning}, df.schema)
-        r.pushFilters([EqualTo(("o_orderkey",), probe)])
-        return len({p.file for p in r.partitions() if p.file is not None})
-
-    def lookup_time(pruning: str) -> float:
-        def one() -> float:
-            q = (spark.read.format("colf").option("pruning", pruning)
-                 .load(d).filter(F.col("o_orderkey") == probe))
-            t0 = _t.perf_counter()
-            q.collect()
-            return _t.perf_counter() - t0
-        one()
-        return round(min(one(), one()), 4)
-
-    total, opened = planned("off"), planned("on")
-    return {
-        "files_total": total,
-        "files_opened": opened,
-        "skip_ratio": round(1 - opened / total, 4) if total else 0.0,
-        "pruned_sec": lookup_time("on"),
-        "unpruned_sec": lookup_time("off"),
-    }
-
-def bench_colf_prefix_bloom(spark, sf_dir: str) -> dict:
-    """Prefix Bloom filters serving pushed StringStartsWith (round-6
-    extension): a hash-scattered utf8 key whose every file spans the
-    full string range, so zone maps keep everything for a mid-range
-    startswith probe; the per-file prefix blooms prove absence and
-    prune to ~0 files."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import StringStartsWith
-
-    from columnar_format_spark.colf.datasource import ColfReader
-    from columnar_format_spark.colf.datasource import register as _register
-    from columnar_format_spark.registry import table as _table
-    from columnar_format_spark.staging import stage_once
-
-    _register(spark)
-
-    def write(d: str) -> None:
-        # letter+digit tags ('a123', 'b124', ...): every hash-scattered
-        # file spans a0..z9, so a letter+LETTER probe is in-range for
-        # every zone map but provably absent from every prefix bloom
-        (_table(spark, sf_dir, "orders")
-         .select(F.concat(F.expr("chr(97 + CAST(o_orderkey % 26 AS INT))"),
-                          F.col("o_orderkey").cast("string")).alias("tag"),
-                 "o_totalprice")
-         .repartition(8)
-         .write.format("colf").option("bloomColumns", "tag")
-         .mode("overwrite").save(d + "/ds"))
-
-    d = stage_once(("colf-prefbloom", sf_dir), "colf_pfb_", write) + "/ds"
-    df = spark.read.format("colf").load(d)
-    pattern = "qq"  # 2nd char is always a digit: absent everywhere
-
-    def planned(pruning: str) -> int:
-        r = ColfReader({"path": d, "pruning": pruning}, df.schema)
-        r.pushFilters([StringStartsWith(("tag",), pattern)])
-        return len({p.file for p in r.partitions() if p.file is not None})
-
-    def probe_time(pruning: str) -> float:
-        def one() -> float:
-            q = (spark.read.format("colf").option("pruning", pruning)
-                 .load(d).filter(F.col("tag").startswith(pattern)))
-            t0 = _t.perf_counter()
-            q.collect()
-            return _t.perf_counter() - t0
-        one()
-        return round(min(one(), one()), 4)
-
-    total, opened = planned("off"), planned("on")
-    return {
-        "files_total": total,
-        "files_opened": opened,
-        "skip_ratio": round(1 - opened / total, 4) if total else 0.0,
-        "pruned_sec": probe_time("on"),
-        "unpruned_sec": probe_time("off"),
-    }
-
-
-def bench_colf_bloom_write_cost(spark, sf_dir: str) -> dict:
-    """Separate the format-fidelity write cost from the Bloom sidecar
-    cost (round-5 judging flagged the drift as unattributed): the same
-    dataset written with blooms off and on, plus the sidecar's size.
-    The delta is what '~10 bits/row of point-lookup pruning' costs at
-    write time."""
-    import os as _os
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from columnar_format_spark.colf.datasource import blooms_path
-    from columnar_format_spark.colf.datasource import register as _register
-    from columnar_format_spark.registry import table as _table
-    from columnar_format_spark.staging import run_dir
-
-    _register(spark)
-    o = _table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("int").alias("o_orderkey"),
-        "o_orderpriority", "o_totalprice").repartition(8)
-    o.count()  # materialize the input read outside the timed writes
-
-    def timed_write(blooms: bool) -> tuple[float, str]:
-        d = run_dir(("bench-bloomcost", sf_dir, blooms), "colf_bwc_") + "/ds"
-        w = o.write.format("colf").mode("overwrite")
-        if blooms:
-            w = w.option("bloomColumns", "o_orderkey,o_orderpriority")
-        t0 = _t.perf_counter()
-        w.save(d)
-        return _t.perf_counter() - t0, d
-
-    timed_write(False)  # warmup: Python datasource worker spin-up
-    off_s, _ = timed_write(False)
-    on_s, d_on = timed_write(True)
-    sidecar = blooms_path(d_on)
-    return {
-        "write_sec_blooms_off": round(off_s, 4),
-        "write_sec_blooms_on": round(on_s, 4),
-        "bloom_write_overhead": round(on_s / off_s, 3) if off_s else 0.0,
-        "sidecar_bytes": (_os.path.getsize(sidecar)
-                          if _os.path.exists(sidecar) else 0),
-    }
-
-
-def bench_colf_float_pruning(spark, sf_dir: str) -> dict:
-    """Zone-map skipping + executor-side residual filtering on a FLOAT
-    measure column (round-6 extension: ranges on float64 now prune and
-    row-filter with Spark's NaN total order). lineitem laid out by
-    l_extendedprice; a ~10% price band opens few of 8 files, and the
-    residual mask trims the transferred batches to the matching rows."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
-
-    from columnar_format_spark.colf.datasource import ColfReader
-    from columnar_format_spark.colf.datasource import register as _register
-    from columnar_format_spark.registry import table as _table
-    from columnar_format_spark.staging import stage_once
-
-    _register(spark)
-
-    def write(d: str) -> None:
-        (_table(spark, sf_dir, "lineitem")
-         .select("l_extendedprice", "l_quantity")
-         .repartitionByRange(8, "l_extendedprice")
-         .write.format("colf").mode("overwrite").save(d + "/ds"))
-
-    d = stage_once(("colf-floatprune", sf_dir), "colf_fprune_", write) + "/ds"
-    df = spark.read.format("colf").load(d)
-    lo, hi = df.stat.approxQuantile("l_extendedprice", [0.3, 0.4], 0.001)
-
-    def planned(pruning: str) -> int:
-        r = ColfReader({"path": d, "pruning": pruning}, df.schema)
-        r.pushFilters([GreaterThanOrEqual(("l_extendedprice",), lo),
-                       LessThanOrEqual(("l_extendedprice",), hi)])
-        return len({p.file for p in r.partitions() if p.file is not None})
-
-    def band_time(pruning: str) -> float:
-        def one() -> float:
-            q = (spark.read.format("colf").option("pruning", pruning)
-                 .option("rowFilter", pruning).load(d)
-                 .filter(F.col("l_extendedprice").between(lo, hi)))
-            t0 = _t.perf_counter()
-            q.agg(F.count(F.lit(1)), F.sum("l_quantity")).collect()
-            return _t.perf_counter() - t0
-        one()
-        return round(min(one(), one()), 4)
-
-    total, opened = planned("off"), planned("on")
-    return {
-        "files_total": total,
-        "files_opened": opened,
-        "skip_ratio": round(1 - opened / total, 4) if total else 0.0,
-        "pruned_sec": band_time("on"),
-        "unpruned_sec": band_time("off"),
-    }
-
-
-def bench_colf_float_bloom(spark, sf_dir: str) -> dict:
-    """Round-7 extension: Bloom filters on a FLOAT64 key (canonical
-    IEEE-bits encoding). The access pattern zone maps can never serve:
-    a point lookup on a hash-scattered double — every file's [min,max]
-    covers the probe, the bloom opens ~1 file."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import EqualTo
-
-    from columnar_format_spark.colf.datasource import ColfReader
-    from columnar_format_spark.colf.datasource import register as _register
-    from columnar_format_spark.registry import table as _table
-    from columnar_format_spark.staging import stage_once
-
-    _register(spark)
-
-    def write(d: str) -> None:
-        # l_extendedprice in ARRIVAL order: high-cardinality, scattered
-        (_table(spark, sf_dir, "lineitem")
-         .select("l_extendedprice", "l_quantity")
-         .repartition(8)
-         .write.format("colf").option("bloomColumns", "l_extendedprice")
-         .mode("overwrite").save(d + "/ds"))
-
-    d = stage_once(("colf-floatbloom", sf_dir), "colf_fbloom_",
-                   write) + "/ds"
-    df = spark.read.format("colf").load(d)
-    probe = float(df.agg(F.max("l_extendedprice")).collect()[0][0])
-
-    def planned(pruning: str) -> int:
-        r = ColfReader({"path": d, "pruning": pruning}, df.schema)
-        r.pushFilters([EqualTo(("l_extendedprice",), probe)])
-        return len({p.file for p in r.partitions() if p.file is not None})
-
-    def lookup_time(pruning: str) -> float:
-        def one() -> float:
-            q = (spark.read.format("colf").option("pruning", pruning)
-                 .load(d).filter(F.col("l_extendedprice") == probe))
-            t0 = _t.perf_counter()
-            q.collect()
-            return _t.perf_counter() - t0
-        one()
-        return round(min(one(), one()), 4)
-
-    total, opened = planned("off"), planned("on")
-    return {
-        "files_total": total,
-        "files_opened": opened,
-        "skip_ratio": round(1 - opened / total, 4) if total else 0.0,
-        "pruned_sec": lookup_time("on"),
-        "unpruned_sec": lookup_time("off"),
-    }
-
-
-if __name__ == "__main__":
-    main()

@@ -197,16 +197,13 @@ SNAPSHOTS_NAME = "_snapshots.json"
 #
 # Compatibility: a dataset with a v1 `_snapshots.json` and no `_log/`
 # keeps appending v1 (no silent migration; maintenance.migrate_log
-# converts). NEW and overwritten datasets default to v2 per
-# LOG_FORMAT_DEFAULT. When both exist, `_log/` is authoritative (a
-# crash after migration wrote `_log/` may leave the stale v1 file).
+# converts). NEW and overwritten datasets are always v2. When both
+# exist, `_log/` is authoritative (a crash after migration wrote
+# `_log/` may leave the stale v1 file).
 # ---------------------------------------------------------------------------
 
 LOG_DIR_NAME = "_log"
 LOG_CHECKPOINT_EVERY = 20
-# module default for NEW/reset datasets; tests monkeypatch to "legacy"
-# to exercise the v1 write path
-LOG_FORMAT_DEFAULT = os.environ.get("COLF_LOG_FORMAT", "sharded")
 
 
 def snapshots_path(dataset_dir: str) -> str:
@@ -878,8 +875,7 @@ def write_snapshots(path: str, snaps: list[dict]) -> None:
     a broken chain."""
     import json
 
-    if is_sharded_log(path) or (not os.path.exists(snapshots_path(path))
-                                and LOG_FORMAT_DEFAULT == "sharded"):
+    if is_sharded_log(path) or not os.path.exists(snapshots_path(path)):
         keep_data = _delta_encode_history(snaps)
         d = log_dir(path)
         os.makedirs(d, exist_ok=True)
@@ -1163,14 +1159,12 @@ def _commit_snapshot_locked(path, live_files, reset, expected_parent,
             f"retry the commit.")
     version = current + 1
     # Which physical log format will this commit append to? An
-    # existing v2 log or a fresh/reset lineage under the sharded
-    # default -> v2 (the entry file's own O_EXCL create is the
-    # cross-process CAS); an existing v1 log keeps appending v1 (no
-    # silent migration — maintenance.migrate_log converts) and needs
-    # the separate _commits marker claim.
-    sharded = sharded_existing or (
-        (reset or not meta) and LOG_FORMAT_DEFAULT == "sharded"
-        and not (not reset and os.path.exists(snapshots_path(path))))
+    # existing v2 log or a fresh/reset lineage -> v2 (the entry file's
+    # own O_EXCL create is the cross-process CAS); an existing v1 log
+    # keeps appending v1 (no silent migration — maintenance.migrate_log
+    # converts) and needs the separate _commits marker claim.
+    sharded = sharded_existing or reset or (
+        not meta and not os.path.exists(snapshots_path(path)))
     if not sharded:
         # a dataset with NO log but leftover markers is a dead
         # lineage's remnant (the documented delete-the-log-to-adopt-

@@ -461,9 +461,9 @@ def _int_coded(spark: SparkSession, sf_dir: str):
         # LSH coding once instead of once per subtree. Checkpoint
         # blocks are reclaimed by ContextCleaner once the returned
         # DataFrame is dropped (the caller's result plan references
-        # them, so an in-query unpersist would break it); bench.py
-        # nudges a gc.collect() between queries so py4j releases the
-        # RDD handles promptly.
+        # them, so an in-query unpersist would break it); a caller
+        # running many queries can gc.collect() between them so py4j
+        # releases the RDD handles promptly.
         .localCheckpoint()
     )
     coded = e.select("vec_id", "qv", "nrm",

@@ -1,144 +1,11 @@
 """Final query registry: importing this module registers every query
-from the operator/function modules into registry.QUERIES.
+from the operator/function modules into registry.QUERIES, in
+registration order.
 
-Registration ORDER matters: the driver's per-round CORRECTNESS gate
-checks exactly the first 50 queries in registration order; the window
-is GENERATED from LEDGER.json (driver_window below) under a standing
-rotation rule: (1) queries with no driver row yet, (2) queries whose
-latest driver row failed, (3) the CHANGED_THIS_ROUND re-prove list,
-(4) backfill by oldest green evidence first.
-Everything stays covered locally by tests/test_queries_oracle.py
-(sf0.001, every query, every run — WITH the driver-replica
-pandas-dtype-parity assertion since round 8) regardless of order;
-rounds 5-8 additionally verified the ENTIRE registry driver-style at
-sf0.01 AND sf0.1 with zero failures (tools/sweep_oracle.py) before
-shipping the window — round 9's endgame gates on the final registry:
-full pytest 769/769, sf0.01 sweep with --dtypes 198/198 parity-clean,
-sf0.1 sweep 198/198, plus a 50-query window sweep at sf0.1 with
---dtypes (50/50) and per-query driver-style checks on every query
-added or changed mid-round (three full gate passes this round).
-
-Registry size: 215 queries (q01-q217, no q123/q205; the count is pinned
-live by tests/test_driver_ledger.py). The round-13 addition is q217
-(baseline JFIF JPEG: the full public DCT pipeline — level shift, 8x8
-orthonormal DCT, Annex-K quantization and Huffman tables, byte-stuffed
-entropy coding — encode AND decode in pure numpy+stdlib inside
-Arrow-batched mapInPandas, with lossy-bounded roundtrip checks and a
-truncation probe; closes decode_image's last "needs an external
-codec" branch). Round-12 additions are q215
-(metadata-log compaction: maintenance.compact_log bounds the log's
-at-rest entry count and cold-read cost by RETENTION — delta-preserving
-rewrite, compressed head checkpoint, loud out-of-retention time
-travel, CDF replay across the compacted basis all proven in-query)
-and q216 (real PNG codec: pure numpy+zlib encode/decode with all five
-PNG filter types and chunk-CRC corruption probes inside Arrow-batched
-mapInPandas — closes the multimodal tier's last stub).
-Round-11 additions are q213
-(metadata-log migration: the v1 monolithic `_snapshots.json`/
-`_manifest.json`/`_blooms.json` metadata — O(table) bytes rewritten
-per commit — migrates in place to the sharded v2 layout of per-commit
-delta-log entries, checkpoints, and immutable sidecar shards with the
-logical history bit-identical across the boundary; proven in-query by
-time travel into the legacy era, a CDF replay spanning the migration,
-and a one-new-file commit-cost pin. The v2 layout is the DEFAULT for
-new datasets this round — every other COLF query now exercises it.)
-and q214 (statistics-driven maintenance planning: manifest KMV NDV
-sketches gate merge_into's pruning-vs-scan discovery choice and
-per-file sizes set binpack's output target — the engine consuming its
-own q211 stats, plan-pinned in-query).
-Round-10 additions are q200
-(Change Data Feed: row-level _change_type/_commit_version CDC reads of
-a DML'd table, batch AND streaming — the changelog-stream answer to
-the round-9 refusal on live MoR masks), q201 (rewrite_delete_files:
-minor compaction coalescing position-delete sidecars per target file,
-zero data bytes rewritten, data_change=false), q202 (field-ID schema
-evolution: rename/drop/widen as table metadata with name-mapping
-fallback for ID-less files), q203 (SQL surface: register_table +
-spark.sql over colf views including time travel), and q204 (real Y4M
-video codec: YUV4MPEG2/C444 encode-decode in pure numpy, per-frame
-checksums recomputed relationally), then q206 (remove_orphan_files:
-Iceberg's orphan cleanup — unreferenced crash artifacts swept past a
-grace period with zero snapshots expired), q207 (metadata tables:
-files/snapshots/refs as queryable DataFrames — Iceberg's table$files,
-answered entirely from the manifest), and q208 (CHECK constraints:
-Delta's ADD CONSTRAINT — executor-side Arrow-batch validation on
-every write path, violations committing nothing), and q209 (binpack:
-Iceberg's selective RewriteDataFiles — only the small-file tail is
-rewritten, big files move zero bytes, MoR masks inherited), and
-q210 (sequence packing: the GPT concat-and-chunk pretraining
-recipe as two JVM window passes — per-stream fill fraction and
-boundary-straddling doc counts in closed form), and q211 (NDV
-statistics from metadata: per-file KMV sketches in the manifest —
-the Iceberg Puffin role — merged to table NDV with zero data I/O,
-kept fresh through DML by the rewrite plumbing, 5-sigma-audited
-against exact counts), and q212 (CDF replay: head state
-reconstructed purely from the change feed equals a direct read —
-the consumer-side completeness proof for q200).
-Round-9 additions
-were
-q195 (merge-on-read position deletes — Iceberg v2's model: the delete
-writes (file, pos) sidecars, themselves COLF files, plus ONE metadata
-commit; every reader masks deleted ordinals at decode time,
-stripe-aware; appends inherit the delete list, rollback restores the
-target's, compact() materializes deletes away and vacuum() reclaims
-expired sidecars — the answer to "a one-row delete at 100 TB rewrites
-a 128 MB file") and q196 (SemDeDup semantic dedup — k-means in PCA
-space on a capped deterministic sample, greedy keep-one-per-semantic-
-group within each cluster in (centroid-distance, vec_id) order,
-re-proved in-query by an independent pairwise audit), plus q197
-(merge-on-read UPDATE: position-delete sidecars masking the old
-images + appended files carrying the new ones, one metadata commit —
-q188's CoW twin, same oracle, zero rewritten bytes) and q198
-(EQUALITY deletes — the predicate itself committed as table metadata
-with a sequence number: zero scans, zero files; readers mask matching
-rows in files whose first-appearance version predates the delete, so
-later appends legally re-introduce matching rows — the streaming-
-upsert-sink flavor, completing the delete triad) and q199
-(merge-on-read MERGE: position sidecars mask every matched target row
-— exact for key tuples, unlike per-column predicates — and the whole
-source appends, one commit; with q195/q197 this completes the full
-CoW x MoR DML matrix). Round-8
-additions were
-q184 (row-accurate changelog: per-row _change_type insert/delete
-between versions, common files cancelling at the metadata level),
-q185 (named snapshot refs — tags pin versions past vacuum, read via
-option("ref", name)), q186 (write-audit-publish: option("wap",
-"true") stages an append invisible to normal reads until
-maintenance.publish_wap cherry-picks it onto the published head), and
-q187 (branch lineages: multi-commit staging on option("branch",
-name), landed by one fast_forward metadata commit; plus metadata-only
-rollback()), plus q188 (copy-on-write row-level UPDATE —
-maintenance.update_where, the remaining DML verb: metadata-planned
-touched-file discovery, NULL-condition rows survive unchanged,
-layout metadata rides through the rewrite) and q189 (RECORDED z-order
-clustering — maintenance.set_clustering as table metadata, compact()
-re-clusters by the rank-normalized Morton interleave, Delta OPTIMIZE
-ZORDER's model), and q190 (distributed PCA over the embedding column:
-one-pass Arrow-batched covariance partials + driver eigh + broadcast
-batch-matmul projection, audited by the q135-style in-query bounds
-the oracle pins), and q191 (exact-substring dedup with span REMOVAL —
-the Lee et al. ExactSubstr policy as a distributed hash-gram pass:
-keep-first per duplicated 8-token span, excise every other occurrence
-via position-set union), and q192 (PCA-compressed ANN: 32-d reduced
-scan + corpus/10 shortlist + exact int64 rerank, recall>=0.9 audited
-against the exact full-space answer — FAISS's PCAR pre-transform
-tier), and q193 (a REAL image codec in the multimodal tier: pure-numpy
-binary P6 PPM encode/decode/resize over BinaryType + mapInPandas,
-channel sums checked against closed form and pixel totals recomputed
-relationally), and q194 (REAL audio: RIFF/WAVE PCM16 encode/decode in
-pure numpy, exact int64 per-clip energy recomputed relationally).
-Round-6 additions were
-q169-q174 (layout/metadata tier); round-7 additions are q175-q178 —
-TPC-H Q2/Q11/Q12/Q20, completing the full 22-query TPC-H suite (Q1=q01,
-Q14=q72; partsupp-dependent shapes adapted via a lineitem-derived
-supply relation, see operators/tpch.py) — q179 (partition-spec
-evolution: Iceberg-style spec-as-table-metadata with per-file layout
-coexistence and compact()-to-latest-spec), q180 (bucket(N,col)
-transform partitioning with reader-side probe-to-bucket pruning),
-q181 (spec-aware partitions metadata table over a mixed layout), and
-q182 (recorded sort orders: in-file-sorted writes, compact() re-clusters
-by the recorded order instead of scrambling it), and q183 (row-accurate
-snapshot diff between table versions via time travel + exceptAll).
+Each entry is a QuerySpec: ``fn(spark, sf_dir) -> DataFrame`` plus an
+optional DuckDB ``oracle`` SQL string. __spark_entry__.py exposes the
+two views below; tests/test_queries_oracle.py runs every query against
+its oracle, and tests/test_entry.py pins that every query has one.
 """
 
 from __future__ import annotations
@@ -149,121 +16,6 @@ from .colf import roundtrip  # noqa: F401
 from . import sources  # noqa: F401
 from .streaming import stream_queries  # noqa: F401
 from .registry import QUERIES, QuerySpec  # noqa: F401
-
-# The driver window is GENERATED, not hand-maintained (the round-9
-# review flagged the prose ledger as rot-prone): LEDGER.json records
-# each query's most recent driver evidence (regenerated from the
-# CORRECTNESS_r*.json files by tools/ledger.py), and the window is
-# derived from it under the standing rotation rule — (1) queries with
-# no driver row yet, (2) queries whose latest driver row FAILED,
-# (3) the CHANGED_THIS_ROUND re-prove list below, (4) backfill by
-# oldest evidence first (ties by name, so cohorts go lowest query
-# number first). `python tools/ledger.py --check` (run by
-# tools/ship_gates.sh and tests/test_driver_ledger.py) fails the build
-# if the ledger is stale or the window violates the rotation.
-#
-# PRE-SHIP CHECKLIST (every round, after the last product commit) —
-# executable as tools/ship_gates.sh:
-#   1. full test gate: python -m pytest tests/ -x -q -m "" (includes
-#      the per-query pandas_dtype_parity assertion at sf0.001, the
-#      ledger/window consistency check, AND the slow tier that
-#      pytest.ini deselects from the driver's bounded default run);
-#   2. driver-style sweep WITH dtype parity at sf0.01:
-#      python tools/sweep_oracle.py --dtypes   (expect 0 fail);
-#   3. the same sweep at sf0.1 for every query in the window;
-#   4. python bench.py — summary line must parse and stay <=1500 chars.
-WINDOW_SIZE = 50
-
-# Queries whose plan, oracle, or underlying machinery changed this
-# round — they re-prove themselves in the driver window even when they
-# have recent green evidence. Round 14 (r13 verdict item #2): round
-# 13's optimization commits restructured ~27 query paths but only 7
-# landed in the r13 driver window; the rest re-prove here — the
-# DML-history staging block (q209/q212/q213/q214/q215/q200/q198), the
-# z-order family (q157/q169/q182/q189 — single-expr rank buckets +
-# percentile_approx cuts), the ANN localCheckpoint family
-# (q62/q135/q151/q165/q166), and the local_df stats/metadata tier
-# (q172/q174/q181/q211). Round-14 optimization changes to these same
-# paths (merge fusion, manifest-count fast path, orphan-scenario
-# staging) are covered by the same list; q206 and q84/q52 join it for
-# this round's staging/shuffle changes.
-CHANGED_THIS_ROUND = [
-    "q209_colf_binpack",
-    "q212_colf_cdf_replay",
-    "q213_colf_metadata_migration",
-    "q214_colf_stats_planning",
-    "q215_colf_log_compaction",
-    "q200_colf_cdc_stream",
-    "q198_colf_eq_delete",
-    "q157_zorder_pruning",
-    "q169_zorder_rank",
-    "q182_colf_sorted_maintenance",
-    "q189_colf_clustered_maintenance",
-    "q62_ann_lsh",
-    "q135_ann_recall",
-    "q151_knn_label",
-    "q165_ann_pq",
-    "q166_ann_ivfpq",
-    "q172_metadata_profile",
-    "q174_partition_stats",
-    "q181_partition_stats_evolved",
-    "q211_colf_ndv_stats",
-    "q206_colf_orphan_cleanup",
-    "q84_stream_stream_join",
-    "q52_minhash_lsh",
-    "q56_dedup_components",
-    "q149_colf_merge",
-    "q199_colf_mor_merge",
-    # restructured in round 14 (visible_count baselines, staged
-    # histories, single-pass diff):
-    "q201_colf_rewrite_deletes",
-    "q208_colf_check_constraints",
-    "q183_colf_snapshot_diff",
-    "q186_colf_wap",
-    "q187_colf_branch",
-]
-
-
-def _load_ledger() -> dict:
-    import json
-    import os
-
-    p = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "LEDGER.json")
-    try:
-        with open(p) as f:
-            return json.load(f)
-    except OSError:
-        return {}
-
-
-def driver_window() -> list[str]:
-    """The first WINDOW_SIZE queries the driver will gate this round,
-    derived from LEDGER.json under the rotation rule (see module
-    docstring). Deterministic given the ledger + CHANGED_THIS_ROUND."""
-    ledger = _load_ledger()
-    new = [n for n in QUERIES if n not in ledger]
-    failed = [n for n in QUERIES
-              if n in ledger and ledger[n]["status"] == "fail"
-              and n not in set(new)]
-    head = set(new) | set(failed)
-    changed = [n for n in CHANGED_THIS_ROUND
-               if n in QUERIES and n not in head]
-    head |= set(changed)
-    rest = sorted((n for n in QUERIES if n not in head),
-                  key=lambda n: (ledger[n]["round"], n))
-    return (new + failed + changed + rest)[:WINDOW_SIZE]
-
-
-def _reorder() -> None:
-    window = driver_window()
-    rest = [n for n in QUERIES if n not in set(window)]
-    ordered = {n: QUERIES[n] for n in window + rest}
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder()
 
 
 def spark_queries():

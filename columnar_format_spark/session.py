@@ -42,11 +42,9 @@ def get_spark(app_name: str = "columnar-format-spark",
         # Bytes-first is the guide's cluster posture — partitions sized
         # 64 MB regardless of core count — and measured 5-25% off
         # shuffle-bound queries here (every sub-64MB shuffle becomes
-        # one task instead of 32 near-empty ones). Env-overridable for
-        # A/B (SPARK_GRAFT_PARALLELISM_FIRST=1 restores the default).
+        # one task instead of 32 near-empty ones).
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                "true" if os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST")
-                else "false")
+                "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 32)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -57,11 +55,8 @@ def get_spark(app_name: str = "columnar-format-spark",
         # Matters doubly here: loopback SYN latency under concurrent
         # connects measured p99 ~1 s on the bench box, and every COLF
         # action plans through a Python-datasource worker. Measured
-        # -25-35% on small COLF actions; env-overridable
-        # (SPARK_GRAFT_TCP_WORKERS=1 restores TCP).
-        .config("spark.python.unix.domain.socket.enabled",
-                "false" if os.environ.get("SPARK_GRAFT_TCP_WORKERS")
-                else "true")
+        # -25-35% on small COLF actions.
+        .config("spark.python.unix.domain.socket.enabled", "true")
         # limit(n).collect() — the merge kstat probes, dup probes and
         # stream drains — defaults to a 1-partition trial job that
         # scales up 4x per round (limit.scaleUpFactor), costing 3 jobs

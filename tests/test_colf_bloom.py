@@ -327,6 +327,15 @@ def test_float_bloom_point_lookup_prunes(spark, tmp_path):
     assert opened(-1.0) == 0        # absent key: every file pruned
     present = df.filter("id = 12345").first().key
     assert opened(present) >= 1
+    # a present key sits inside every file's zone map, so only the
+    # blooms prune: its file plus at most one false positive of 8
+    from columnar_format_spark.colf.datasource import (
+        _file_may_match, load_manifest)
+
+    probe = EqualTo(("key",), present)
+    assert all(_file_may_match(stats, probe)
+               for stats in load_manifest(p).values())
+    assert opened(present) <= 2 < opened(present, "off") == 8
     back = spark.read.format("colf").load(p)
     assert back.filter(F.col("key") == present).count() >= 1
     # signed zero: stored -0.0, probed 0.0 — SQL-equal, must survive

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     EqualTo,
     GreaterThan,
+    GreaterThanOrEqual,
     IsNull,
     LessThanOrEqual,
 )
@@ -125,6 +126,28 @@ def test_pruning_off_option_scans_all_files(spark, ranged_dataset):
         .filter(F.col("o_orderkey") == some_key).count()
     )
     assert off == on > 0
+
+
+def test_float_range_filter_prunes(spark, tmp_path):
+    """Zone maps prune on float64 as well: a price band over a dataset
+    range-partitioned on price opens only the files it overlaps."""
+    register(spark)
+    d = str(tmp_path / "prices")
+    (spark.range(8000)
+     .select((F.col("id") * 1.25).alias("price"),
+             F.col("id").cast("int").alias("id"))
+     .repartitionByRange(8, "price")
+     .write.format("colf").mode("overwrite").save(d))
+    band = [GreaterThanOrEqual(("price",), 5500.0),
+            LessThanOrEqual(("price",), 6100.0)]
+    opened = [p for p in _reader(d, band).partitions() if p.file is not None]
+    assert 1 <= len(opened) <= 2
+    r = ColfReader({"path": d, "pruning": "off"}, None)
+    r.pushFilters(band)
+    assert len(r.partitions()) == 8
+    got = (spark.read.format("colf").load(d)
+           .filter(F.col("price").between(5500.0, 6100.0)).count())
+    assert got == 481  # ids 4400..4880
 
 
 def test_files_without_manifest_entry_survive(ranged_dataset):

@@ -1,8 +1,12 @@
 """Smoke tests for the driver contract in __spark_entry__.py."""
 
+import os
+import re
+import sys
+
 import __spark_entry__ as entrymod
 
-from tests.conftest import SF_SMALL
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_entry_returns_rows(spark):
@@ -22,20 +26,22 @@ def test_queries_and_oracles_align(spark):
     assert len(os_) >= len(qs) - 5
 
 
-def test_every_oracle_less_query_runs_and_has_schema(spark):
-    # Only the handful of queries WITHOUT a DuckDB oracle: every
-    # oracle-backed query is executed end-to-end (collect + row/
-    # schema/dtype compare) by test_queries_oracle in the same gate,
-    # so re-building all 215 here re-ran ~5 minutes of fixture DML
-    # for zero added coverage (r13 verdict item #2: the suite
-    # outgrew the driver's budget).
-    qs = entrymod.queries()
-    oracled = set(entrymod.oracle_sql())
-    ran = 0
-    for name, fn in qs.items():
-        if name in oracled:
-            continue
-        df = fn(spark, SF_SMALL)
-        assert df.columns, name
-        ran += 1
-    assert ran >= 1  # the oracle-less tail exists and was exercised
+def test_every_query_has_an_oracle():
+    # test_queries_oracle executes and compares every query that has
+    # an oracle, so an oracle for each registered query means every
+    # query is run end to end in that gate.
+    assert set(entrymod.oracle_sql()) == set(entrymod.queries())
+
+
+def test_readme_query_count_is_live():
+    """README's stated registry size must match the registry (the
+    round-7..9 reviews caught this count rotting twice)."""
+    sys.path.insert(0, REPO)
+    from columnar_format_spark.queries import QUERIES
+
+    with open(os.path.join(REPO, "README.md")) as f:
+        text = f.read()
+    m = re.search(r"`queries\(\)` \((\d+) named queries\)", text)
+    assert m, "README no longer states the registry size"
+    assert int(m.group(1)) == len(QUERIES), (
+        f"README says {m.group(1)} queries, registry has {len(QUERIES)}")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") for named queries to files.
 
-    python tools/explain_query.py --out plans/r14 --suffix _before q183 q206
+    python tools/explain_query.py --out /tmp/plans --suffix _before q183 q206
 
 Writes <out>/<full_query_name><suffix>.txt for every registered query
 matching any name substring. Runs at sf0.001 by default (plan SHAPE is

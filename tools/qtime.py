@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-query timing + Spark job-count probe (optimization rounds).
 
-Times each named query with bench.py's protocol (noop sink, 1 warmup +
+Times each named query end to end into Spark's noop sink (1 warmup +
 min of N reps) and additionally reports the number of Spark JOBS the
 query launched (statusTracker over a per-query job group) — the
 §1.2 "action count" evidence for fixture-heavy metadata queries whose

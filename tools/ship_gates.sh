@@ -1,13 +1,11 @@
 #!/usr/bin/env bash
-# One-shot pre-ship gate runner (the checklist in queries.py's
-# docstring, executable): full pytest, driver-style sweeps with dtype
-# parity at sf0.01 and plain at sf0.1, then bench. Exits non-zero on
-# the first red gate. Artifacts land in /tmp/ship_gates.*
+# One-shot pre-ship gate runner: full pytest (slow tier included),
+# driver-style oracle sweeps with dtype parity at sf0.01 and plain at
+# sf0.1, then one untraced perfbench run per workload, each of which
+# must answer every operation correctly. Exits non-zero on the first
+# red gate. Artifacts land in /tmp/ship_gates.*
 set -u
 cd "$(dirname "$0")/.."
-
-echo "== gate 0/4: ledger/window consistency =="
-python tools/ledger.py --check || { echo "LEDGER RED"; exit 1; }
 
 echo "== gate 1/4: full pytest (INCLUDING the slow tier) =="
 # pytest.ini deselects `slow` by default so the driver's bounded run
@@ -29,16 +27,21 @@ python tools/sweep_oracle.py /root/testdata/sf0.1 \
     || { tail -1 /tmp/ship_gates.sf01.jsonl; echo "SWEEP sf0.1 RED"; exit 1; }
 tail -1 /tmp/ship_gates.sf01.jsonl
 
-echo "== gate 4/4: bench summary line =="
-python bench.py 2>/dev/null | tail -1 > /tmp/ship_gates.bench
-cat /tmp/ship_gates.bench
-python - <<'EOF' || exit 1
+echo "== gate 4/4: perfbench, one untraced run per workload =="
+for w in lookup scan ingest; do
+    python3 perfbench/run.py --workload "$w" --seed 1 --seconds 6 --trace 0 \
+        > "/tmp/ship_gates.perfbench.$w" \
+        || { echo "PERFBENCH $w RED"; exit 1; }
+    python3 - "$w" "/tmp/ship_gates.perfbench.$w" <<'EOF' || exit 1
 import json
-line = open("/tmp/ship_gates.bench").read().strip()
-d = json.loads(line)
-assert len(line) <= 1500, f"summary line {len(line)} chars"
-assert d["metric"] == "headline_queries_total" and d["n_queries"] > 0
-print(f"bench OK: {d['value']}s / {d['n_queries']} queries, "
-      f"line {len(line)} chars")
+import sys
+
+w, path = sys.argv[1:]
+m = json.loads(open(path).read().strip().splitlines()[-1])["metrics"]
+frac = m["correct_frac"]["value"]
+print(f"perfbench {w}: correct_frac {frac}, "
+      f"read_p50_ms {m['read_p50_ms']['value']}")
+assert frac == 1, f"PERFBENCH {w} RED: correct_frac {frac}"
 EOF
+done
 echo "== ALL GATES GREEN =="

@@ -128,7 +128,7 @@ def main() -> int:
             n_fail += 1
         rec["sec"] = round(time.perf_counter() - t0, 2)
         print(json.dumps(rec), flush=True)
-        # drop temp views streaming queries leave behind (bench.py hygiene)
+        # drop temp views streaming queries leave behind
         for t in spark.catalog.listTables():
             if t.name.startswith("q_") and t.isTemporary:
                 spark.catalog.dropTempView(t.name)
