@@ -18,4 +18,8 @@ Layout:
                 queries plus DuckDB oracle SQL for each.
 """
 
+# First: every Spark worker that unpickles engine code imports this
+# package, which makes its later per-task cache invalidations cheap.
+from columnar_format_spark import _zipimport  # noqa: F401
+
 __version__ = "0.1.0"

@@ -326,8 +326,9 @@ def to_legacy_log(path: str) -> dict:
                 "head": snaps[-1]["version"]}
 
 
-def _bootstrap_log(path: str) -> tuple[int, list[str]]:
-    """Returns (parent version, live basenames), creating snapshot v1
+def _bootstrap_log(path: str) -> tuple[int, list[str], int | None]:
+    """Returns (parent version, live basenames, the version those live
+    basenames were published at), creating snapshot v1
     from the directory listing when the dataset has no metadata log
     yet (reference-writer / hand-made dirs). CoW rewrites MOVE their
     output files into the live directory before the snapshot commit;
@@ -347,10 +348,22 @@ def _bootstrap_log(path: str) -> tuple[int, list[str]]:
         from .datasource import published_snapshots
 
         pub = published_snapshots(snaps)
-        return snaps[-1]["version"], list(pub[-1]["files"]) if pub else []
+        head = pub[-1] if pub else {"files": [], "version": None}
+        return snaps[-1]["version"], list(head["files"]), head["version"]
     live = [os.path.basename(f) for f in dataset_files(path)]
     version = commit_snapshot(path, live)
-    return version, live
+    return version, live, version
+
+
+def _read_base(spark: SparkSession, base_version: int | None):
+    """Reader of snapshot ``base_version``, the one a DML planned from
+    (see _bootstrap_log; None when nothing is published yet). The files
+    it names stay readable when a concurrent commit replaces them; that
+    commit then fails the DML's own commit with the retryable
+    concurrent-commit error instead of the read."""
+    reader = spark.read.format("colf")
+    return reader if base_version is None \
+        else reader.option("snapshot", str(base_version))
 
 
 def _dataset_stripe_rows(path: str, basenames: list[str]) -> int | None:
@@ -791,7 +804,7 @@ def compact(spark: SparkSession, path: str, target_files: int | None = None,
     # so a logless dataset must gain a log FIRST (_bootstrap_log) or a
     # crash in that window would leave listing-readers double-counting
     if retain:
-        parent, _ = _bootstrap_log(path)
+        parent, _, _ = _bootstrap_log(path)
     else:
         snaps0 = load_snapshots(path)
         parent = snaps0[-1]["version"] if snaps0 else 0
@@ -948,7 +961,7 @@ def binpack(spark: SparkSession, path: str, *, smaller_than: int,
 
     if smaller_than < 1:
         raise ValueError("smaller_than must be >= 1")
-    parent, _ = _bootstrap_log(path)
+    parent, _, _ = _bootstrap_log(path)
     live = live_files(path)
     cand = [f for f in live if os.path.getsize(f) < smaller_than]
     # STATS-DRIVEN output sizing (round-10 verdict item #5): with no
@@ -1158,7 +1171,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     for f in meta["fields"]:
         if f["name"] == old:
             f["name"] = new
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, _ = _bootstrap_log(path)
     return commit_snapshot(path, live0, expected_parent=parent,
                            table_schema=meta)
 
@@ -1181,7 +1194,7 @@ def drop_column(path: str, name: str) -> int:
             f"cannot drop the only column of {path}")
     _guard_schema_change(path, name, "drop")
     meta["fields"] = [f for f in meta["fields"] if f["name"] != name]
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, _ = _bootstrap_log(path)
     return commit_snapshot(path, live0, expected_parent=parent,
                            table_schema=meta)
 
@@ -1207,7 +1220,7 @@ def widen_column(path: str, name: str, to: str = "float64") -> int:
             f"{path}: the only legal promotion is int32 -> float64")
     _guard_schema_change(path, name, "widen")
     by_name[name]["type"] = to
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, _ = _bootstrap_log(path)
     return commit_snapshot(path, live0, expected_parent=parent,
                            table_schema=meta)
 
@@ -1253,7 +1266,7 @@ def rewrite_delete_files(spark: SparkSession, path: str,
     if not os.path.isdir(path):
         raise ValueError(
             f"rewrite_delete_files() needs a dataset directory, got {path}")
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, _ = _bootstrap_log(path)
     head = published_head(path)
     dels = list((head or {}).get("deletes") or [])
     if not dels:
@@ -2051,23 +2064,28 @@ def _parse_condition(condition: str, types: dict):
     return flts or None
 
 
-def _visible_rows(spark: SparkSession, path: str, touched: list[str],
+def _visible_rows(spark: SparkSession, path: str,
+                  base_version: int | None, touched: list[str],
                   man: dict, any_col: str) -> int:
-    """VISIBLE row count of the touched files — what CoW count
-    arithmetic must start from on a dataset carrying merge-on-read
-    masks: manifest counts minus position-masked ordinals, or (when
-    equality deletes are live — predicates defeat metadata arithmetic)
-    one single-column reader count over just the touched sliver."""
-    from .datasource import delete_positions_map, published_head
+    """VISIBLE row count of the touched files in snapshot
+    ``base_version`` — what CoW count arithmetic must start from on a
+    dataset carrying merge-on-read masks: manifest counts minus
+    position-masked ordinals, or (when equality deletes are live —
+    predicates defeat metadata arithmetic) one single-column reader
+    count over just the touched sliver. The masks come from that
+    snapshot, not the head: the rewrite's survivors are read there, so
+    a mask committed since would otherwise be counted as deleted."""
+    from .datasource import delete_positions_map, materialize_log_versions
 
-    head = published_head(path)
-    if head and head.get("eq_deletes"):
-        return (spark.read.format("colf")
+    snap = None if base_version is None else \
+        materialize_log_versions(path, [base_version])[base_version]
+    if snap and snap.get("eq_deletes"):
+        return (_read_base(spark, base_version)
                 .option("files", ",".join(touched))
                 .option("columns", any_col).load(path).count())
     total = sum(man[b]["num_rows"] for b in touched)
-    if head and head.get("deletes"):
-        dmap = delete_positions_map(path, head["deletes"])
+    if snap and snap.get("deletes"):
+        dmap = delete_positions_map(path, snap["deletes"])
         total -= sum(len(dmap.get(b, ())) for b in touched)
     return total
 
@@ -2121,16 +2139,24 @@ def visible_count(spark: SparkSession, path: str,
     return rd.load(path).count()
 
 
-def _plan_candidates(path: str, flts, live0: list[str]):
+def _plan_candidates(path: str, flts, live0: list[str],
+                     base_version: int | None):
     """Candidate touched files from the reader's OWN planning (zone
-    maps, Bloom sidecars, stripe stats — metadata only, no data scan).
+    maps, Bloom sidecars, stripe stats — metadata only, no data scan)
+    of snapshot ``base_version``, the one ``live0`` comes from: planning the
+    head instead would find no candidates once a concurrent commit had
+    replaced them, and the DML would return a no-op without its commit
+    ever detecting the race.
     Returns a sorted basename list: a conservative SUPERSET of the
     files holding any matching row, so rewriting exactly these files
     can never lose a match. None when any candidate lacks a manifest
     row count (the exact-count arithmetic then needs the scan path)."""
     from .datasource import ColfDataSource
 
-    ds = ColfDataSource({"path": path})
+    opts = {"path": path}
+    if base_version is not None:
+        opts["snapshot"] = str(base_version)
+    ds = ColfDataSource(opts)
     reader = ds.reader(ds.schema())
     reader.pushFilters(list(flts))
     live = set(live0)
@@ -2165,7 +2191,7 @@ def _delete_where_eq(path: str, condition: str) -> dict:
     from .datasource import published_head, serialize_eq_filters
     from .format import ColfFormatError
 
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, _ = _bootstrap_log(path)
     if not live0 and parent == 0:
         raise ColfFormatError(
             f"equality delete needs a dataset with a metadata log at "
@@ -2245,7 +2271,7 @@ def _delete_where_mor(spark: SparkSession, path: str,
 
     from .datasource import POS_COLUMN, published_head
 
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, base_version = _bootstrap_log(path)
 
     def noop() -> dict:
         return {"version": parent, "n_deleted_rows": 0,
@@ -2262,7 +2288,7 @@ def _delete_where_mor(spark: SparkSession, path: str,
     cond_cols = [c for c in fields
                  if re.search(rf"\b{re.escape(c)}\b", condition)] \
         or fields[:1]
-    matches = (spark.read.format("colf")
+    matches = (_read_base(spark, base_version)
                .option("withFileColumn", "true")
                .option("withPosColumn", "true")
                .option("columns",
@@ -2356,7 +2382,7 @@ def delete_where(spark: SparkSession, path: str, condition: str,
         return _delete_where_eq(path, condition)
     if mode != "cow":
         return _delete_where_mor(spark, path, condition)
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, base_version = _bootstrap_log(path)
 
     def noop() -> dict:
         return {"version": parent, "n_deleted_rows": 0,
@@ -2377,7 +2403,7 @@ def delete_where(spark: SparkSession, path: str, condition: str,
     discovery = "scan"
     flts = _parse_condition(condition, types)
     if flts is not None:
-        cand = _plan_candidates(path, flts, live0)
+        cand = _plan_candidates(path, flts, live0, base_version)
         if cand is not None:
             if not cand:
                 return noop()
@@ -2386,8 +2412,9 @@ def delete_where(spark: SparkSession, path: str, condition: str,
             # VISIBLE rows, not raw manifest counts: rows already
             # masked by merge-on-read position/equality deletes must
             # not be counted as deleted again by this rewrite
-            rows_before = _visible_rows(spark, path, touched,
-                                        load_manifest(path), fields[0])
+            rows_before = _visible_rows(spark, path, base_version,
+                                        touched, load_manifest(path),
+                                        fields[0])
 
     if touched is None:
         # scan discovery: pass 1 reads only the columns the condition
@@ -2400,7 +2427,7 @@ def delete_where(spark: SparkSession, path: str, condition: str,
         cond_cols = [c for c in fields
                      if re.search(rf"\b{re.escape(c)}\b", condition)] \
             or fields[:1]
-        tagged = (spark.read.format("colf")
+        tagged = (_read_base(spark, base_version)
                   .option("withFileColumn", "true")
                   .option("columns", ",".join([*cond_cols, "_colf_file"]))
                   .load(path))
@@ -2416,7 +2443,7 @@ def delete_where(spark: SparkSession, path: str, condition: str,
     # SQL/Iceberg DELETE removes only rows where the condition is TRUE;
     # rows where it evaluates to NULL must SURVIVE the rewrite (a bare
     # NOT(condition) would drop them uncounted — data loss)
-    survivors = (spark.read.format("colf")
+    survivors = (_read_base(spark, base_version)
                  .option("files", ",".join(touched)).load(path)
                  .filter(f"NOT coalesce(({condition}), false)"))
     from .format import read_schema
@@ -2498,7 +2525,7 @@ def _update_where_mor(spark: SparkSession, path: str,
 
     from .datasource import POS_COLUMN, published_head
 
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, base_version = _bootstrap_log(path)
 
     def noop() -> dict:
         return {"version": parent, "n_updated_rows": 0,
@@ -2520,7 +2547,7 @@ def _update_where_mor(spark: SparkSession, path: str,
                 f"(have: {sorted(types)})")
     fields = list(types)
 
-    matched = (spark.read.format("colf")
+    matched = (_read_base(spark, base_version)
                .option("withFileColumn", "true")
                .option("withPosColumn", "true")
                .load(path)
@@ -2642,7 +2669,7 @@ def update_where(spark: SparkSession, path: str,
         raise ValueError(f"update_where mode must be 'cow' or 'mor', got {mode!r}")
     if mode != "cow":
         return _update_where_mor(spark, path, assignments, condition)
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, base_version = _bootstrap_log(path)
 
     def noop() -> dict:
         return {"version": parent, "n_updated_rows": 0,
@@ -2667,7 +2694,7 @@ def update_where(spark: SparkSession, path: str,
     discovery = "scan"
     flts = _parse_condition(condition, types)
     if flts is not None:
-        cand = _plan_candidates(path, flts, live0)
+        cand = _plan_candidates(path, flts, live0, base_version)
         if cand is not None:
             if not cand:
                 return noop()
@@ -2680,7 +2707,7 @@ def update_where(spark: SparkSession, path: str,
         cond_cols = [c for c in fields
                      if re.search(rf"\b{re.escape(c)}\b", condition)] \
             or fields[:1]
-        tagged = (spark.read.format("colf")
+        tagged = (_read_base(spark, base_version)
                   .option("withFileColumn", "true")
                   .option("columns", ",".join([*cond_cols, "_colf_file"]))
                   .load(path))
@@ -2695,14 +2722,14 @@ def update_where(spark: SparkSession, path: str,
     else:
         # exact count over just the touched sliver (rows are not
         # removed, so manifest arithmetic cannot count the matches)
-        n_updated = (spark.read.format("colf")
+        n_updated = (_read_base(spark, base_version)
                      .option("files", ",".join(touched)).load(path)
                      .filter(condition).count())
         if n_updated == 0:
             return noop()  # every candidate was a stats false positive
 
     cond = F.expr(f"coalesce(({condition}), false)")
-    df = (spark.read.format("colf")
+    df = (_read_base(spark, base_version)
           .option("files", ",".join(touched)).load(path))
     for col, expr in assignments.items():
         df = df.withColumn(
@@ -2767,7 +2794,7 @@ def _merge_into_mor(spark: SparkSession, path: str, source,
         raise ValueError(f"merge_into() needs a dataset directory, got {path}")
     if not key_cols:
         raise ValueError("merge_into() needs at least one key column")
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, base_version = _bootstrap_log(path)
     target_fields = ([c.name for c in dataset_logical_columns(
         path, [os.path.join(path, b) for b in live0])] if live0 else
         spark.read.format("colf").load(path).schema.fieldNames())
@@ -2817,7 +2844,7 @@ def _merge_into_mor(spark: SparkSession, path: str, source,
         # than the scan it prunes (measured 10.7 s -> ~2 s on q199).
         # The broadcast semi join against the exact key tuples decides
         # membership either way, so pruning is purely an optimization.
-        r = (spark.read.format("colf")
+        r = (_read_base(spark, base_version)
              .option("withFileColumn", "true")
              .option("withPosColumn", "true")
              .option("columns", ",".join(
@@ -2830,7 +2857,8 @@ def _merge_into_mor(spark: SparkSession, path: str, source,
                 vals = tuple(x[kc] for x in kstat if x[kc] is not None)
                 if vals:
                     flts.append(In((kc,), vals))
-            cand = _plan_candidates(path, flts, live0) if flts else None
+            cand = _plan_candidates(path, flts, live0, base_version) \
+                if flts else None
             if cand is not None and cand and len(cand) < len(live0):
                 r = r.option("files", ",".join(cand))
         else:
@@ -2971,7 +2999,7 @@ def merge_into(spark: SparkSession, path: str, source,
             f"merge_into mode must be 'cow' or 'mor', got {mode!r}")
     if mode != "cow":
         return _merge_into_mor(spark, path, source, key_cols)
-    parent, live0 = _bootstrap_log(path)
+    parent, live0, base_version = _bootstrap_log(path)
 
     # dataset fields from driver-side header+manifest reads — no Spark
     # job for schema
@@ -3039,8 +3067,8 @@ def merge_into(spark: SparkSession, path: str, source,
             if all(man_s.get(b, {}).get("num_rows") is not None
                    for b in live0):
                 touched = list(live0)
-                rows_before = _visible_rows(spark, path, touched,
-                                            man_s, key_cols[0])
+                rows_before = _visible_rows(spark, path, base_version,
+                                            touched, man_s, key_cols[0])
         if small and not stats_skip:
             # metadata-only discovery (the CDC-upsert regime): per-
             # column IN filters over the reader's OWN planning prune
@@ -3057,12 +3085,13 @@ def merge_into(spark: SparkSession, path: str, source,
                 vals = tuple(r[kc] for r in kstat if r[kc] is not None)
                 if vals:
                     flts.append(In((kc,), vals))
-            cand = _plan_candidates(path, flts, live0) if flts else None
+            cand = _plan_candidates(path, flts, live0, base_version) \
+                if flts else None
             if cand is not None:
                 touched = cand
                 discovery = "metadata-in"
                 rows_before = _visible_rows(
-                    spark, path, touched, load_manifest(path),
+                    spark, path, base_version, touched, load_manifest(path),
                     key_cols[0])
 
         if touched is None and not small and live0:
@@ -3094,7 +3123,8 @@ def merge_into(spark: SparkSession, path: str, source,
             sample = {kc: ((min(vs), max(vs)) if (vs := [
                 r[kc] for r in kstat if r[kc] is not None]) else (None, None))
                 for kc in key_cols}
-            gate = _plan_candidates(path, bounds_filters(sample), live0) \
+            gate = _plan_candidates(
+                path, bounds_filters(sample), live0, base_version) \
                 if any(v[0] is not None for v in sample.values()) else None
             if gate is not None and len(gate) <= max(1, len(live0) // 4):
                 aggs = [F.sum("n").alias("__n_source"),
@@ -3113,22 +3143,23 @@ def merge_into(spark: SparkSession, path: str, source,
                         f"ambiguous")
                 exact = {kc: (st[f"__mn_{kc}"], st[f"__mx_{kc}"])
                          for kc in key_cols}
-                cand = _plan_candidates(path, bounds_filters(exact), live0) \
+                cand = _plan_candidates(
+                    path, bounds_filters(exact), live0, base_version) \
                     if any(v[0] is not None for v in exact.values()) else None
                 if cand is not None and len(cand) <= max(1, len(live0) // 4):
                     touched = cand
                     discovery = "metadata-bounds"
                     n_source = int(st["__n_source"] or 0)
                     rows_before = _visible_rows(
-                        spark, path, touched, load_manifest(path),
-                        key_cols[0])
+                        spark, path, base_version, touched,
+                        load_manifest(path), key_cols[0])
 
         if touched is None:
             # scan discovery: read ONLY the key columns + the virtual
             # file column (the Python datasource API has no automatic
             # column pruning); CDC-sized key values still push as IN
             # filters so zone maps/Blooms prune the scan itself
-            tagged = (spark.read.format("colf")
+            tagged = (_read_base(spark, base_version)
                       .option("withFileColumn", "true")
                       .option("columns", ",".join([*key_cols, "_colf_file"]))
                       .load(path))
@@ -3191,7 +3222,7 @@ def merge_into(spark: SparkSession, path: str, source,
                              (n_source + per_file - 1) // per_file))
         shaped = source.repartition(n_files)
         if touched:
-            survivors = (spark.read.format("colf")
+            survivors = (_read_base(spark, base_version)
                          .option("files", ",".join(touched)).load(path)
                          .join(keys, key_cols, "left_anti"))
             if ver == 3:

@@ -54,8 +54,9 @@ def get_spark(app_name: str = "columnar-format-spark",
         # removes a localhost TCP connect per worker/planner spin-up.
         # Matters doubly here: loopback SYN latency under concurrent
         # connects measured p99 ~1 s on the bench box, and every COLF
-        # action plans through a Python-datasource worker. Measured
-        # -25-35% on small COLF actions.
+        # action plans through a Python-datasource worker. Measured on
+        # 4 vCPU, local[4], p50: a one-task mapPartitions 96-109 ->
+        # 48-56 ms, a COLF point read 194-222 -> 151-176 ms.
         .config("spark.python.unix.domain.socket.enabled", "true")
         # limit(n).collect() — the merge kstat probes, dup probes and
         # stream drains — defaults to a 1-partition trial job that
@@ -82,10 +83,12 @@ def local_df(spark: SparkSession, rows, schema):
     ``spark.createDataFrame(rows, ...)`` parallelizes into
     ``defaultParallelism`` Python-evaluated slices; following it with
     ``coalesce(1)`` (the natural way to write one small file) makes
-    ONE task evaluate all 32 slices SEQUENTIALLY at a few hundred ms
-    of Python-runner round-trip each — measured ~6-7 s per one-row
-    write on the 32-core box, vs ~0.5 s through a one-slice
-    parallelize. Driver-local row sets in this engine are bounded
+    ONE task evaluate every slice SEQUENTIALLY, one Python-runner round
+    trip each. A one-row COLF write from 32 slices measured 450-520 ms
+    against 100-130 ms from one slice (4 vCPU, p50). The round trip
+    cost about 220 ms each (7.7 s per such write) while every worker
+    task re-read pyspark.zip and the spark-core jar; see _zipimport.py.
+    Driver-local row sets in this engine are bounded
     (merge key sets <= MERGE_PUSHDOWN_KEYS, test fixtures, metadata
     tables), so one partition is the right layout anyway — they feed
     broadcasts or single-file writes."""

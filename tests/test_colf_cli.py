@@ -7,7 +7,8 @@ import json
 import subprocess
 import sys
 
-REF = "/root/reference"
+from conftest import REF, requires_reference
+
 CLI = [sys.executable, "-m", "columnar_format_spark.colf.cli"]
 
 
@@ -42,6 +43,7 @@ def test_roundtrip_through_our_cli(tmp_path):
     assert got[3] == ["", "3.25", "日本語", "keep"]
 
 
+@requires_reference
 def test_our_writer_reference_reader(tmp_path):
     csv_in = str(tmp_path / "in.csv")
     colf = str(tmp_path / "t.colf")
@@ -55,6 +57,7 @@ def test_our_writer_reference_reader(tmp_path):
     assert got[3] == ["", "3.25", "日本語", "keep"]
 
 
+@requires_reference
 def test_reference_writer_our_cli_reader(tmp_path):
     csv_in = str(tmp_path / "in.csv")
     colf = str(tmp_path / "t.colf")
@@ -83,6 +86,7 @@ def test_inspect_header_and_missing_column(tmp_path):
     assert bad.returncode != 0  # KeyError, like reader.py:176-177
 
 
+@requires_reference
 def test_header_only_csv_is_defined(tmp_path):
     csv_in = str(tmp_path / "empty.csv")
     colf = str(tmp_path / "t.colf")

@@ -200,6 +200,67 @@ def test_concurrent_cow_deletes_disjoint_both_land(colf_spark, tmp_path):
             + stats["b"]["n_deleted_rows"]) == 200
 
 
+def test_cow_delete_overtaken_after_planning_is_retryable(colf_spark,
+                                                          tmp_path,
+                                                          monkeypatch):
+    """Cell 1 made deterministic: another delete commits right after
+    this one read the head, replacing every file it planned to
+    rewrite. Its reads stay on the snapshot it planned from, so it
+    fails only at its own commit, with the retryable error."""
+    from columnar_format_spark.colf import maintenance
+
+    p = str(tmp_path / "overtaken")
+    _seed(colf_spark, p)
+    real = maintenance._bootstrap_log
+    raced: list = []
+
+    def bootstrap_then_race(path):
+        got = real(path)
+        if not raced:
+            raced.append(path)
+            maintenance.delete_where(colf_spark, p, "k >= 900")
+        return got
+
+    monkeypatch.setattr(maintenance, "_bootstrap_log", bootstrap_then_race)
+    with pytest.raises(Exception, match="concurrent commit"):
+        maintenance.delete_where(colf_spark, p, "k < 100")
+    monkeypatch.undo()
+    maintenance.delete_where(colf_spark, p, "k < 100")
+    assert colf_spark.read.format("colf").load(p).count() == 800
+
+
+def test_cow_delete_overtaken_by_mor_mask_is_retryable(colf_spark,
+                                                       tmp_path,
+                                                       monkeypatch):
+    """A merge-on-read delete of a NON-matching row in the file a
+    copy-on-write delete will rewrite commits right after the latter
+    read the head. The rewrite's row count must come from the same
+    snapshot as its survivors: counting the new mask as deleted would
+    net the delete to zero rows and drop it as a no-op, uncommitted."""
+    from columnar_format_spark.colf import maintenance
+
+    p = str(tmp_path / "masked")
+    (colf_spark.range(1000).select(F.col("id").cast("int").alias("k"))
+     .coalesce(1).write.format("colf").mode("overwrite").save(p))
+    real = maintenance._bootstrap_log
+    raced: list = []
+
+    def bootstrap_then_mask(path):
+        got = real(path)
+        if not raced:
+            raced.append(path)
+            maintenance.delete_where(colf_spark, p, "k = 500", mode="mor")
+        return got
+
+    monkeypatch.setattr(maintenance, "_bootstrap_log", bootstrap_then_mask)
+    with pytest.raises(Exception, match="concurrent commit"):
+        maintenance.delete_where(colf_spark, p, "k = 5")
+    monkeypatch.undo()
+    got = maintenance.delete_where(colf_spark, p, "k = 5")
+    assert got["n_deleted_rows"] == 1
+    assert colf_spark.read.format("colf").load(p).count() == 998
+
+
 def test_concurrent_cow_deletes_overlapping_serialize(colf_spark,
                                                       tmp_path):
     """Conflict matrix, cell 2: OVERLAPPING delete predicates must

@@ -342,3 +342,39 @@ def test_partition_columns_cardinality_guard(colf_spark, tmp_path):
          .option("partitionColumns", "uid")
          .option("partitionTupleCap", "10")
          .mode("overwrite").save(str(tmp_path / "hc")))
+
+
+def test_python_workers_do_not_reread_unchanged_zips(spark):
+    """Spark's Python workers call importlib.invalidate_caches() once per
+    task; with the package imported (as unpickling engine code does) an
+    unchanged pyspark.zip or jar on the worker's path is not re-read.
+    Pins the shim in the real worker, whatever path the JVM builds."""
+    import sys
+
+    def count_rereads(_):
+        import importlib
+        import sys
+        import zipimport
+
+        import columnar_format_spark  # noqa: F401  (installs the shim)
+
+        # Importers made before the shim re-read once; a reused worker
+        # did that on its previous task.
+        importlib.invalidate_caches()
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        importers = sum(isinstance(f, zipimport.zipimporter)
+                        for f in sys.path_importer_cache.values())
+        yield importers, len(reads)
+
+    [(importers, rereads)] = (spark.sparkContext.parallelize([0], 1)
+                              .mapPartitions(count_rereads).collect())
+    if importers == 0:
+        pytest.skip("the workers import nothing from zip archives")
+    if sys.version_info < (3, 13):
+        assert rereads == 0, (importers, rereads)

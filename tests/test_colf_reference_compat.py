@@ -12,7 +12,9 @@ import sys
 
 import pytest
 
-REF = "/root/reference"
+from conftest import REF, requires_reference
+
+pytestmark = requires_reference
 
 
 def run_ref(args, **kw):

@@ -8,7 +8,7 @@ import sys
 
 import pytest
 
-REF = "/root/reference"
+from conftest import REF, requires_reference
 
 
 def write_csv(path, header, rows):
@@ -117,6 +117,7 @@ def test_header_only_csv_defined_behavior(colf_spark, tmp_path):
     assert back.columns == ["a", "b"]
 
 
+@requires_reference
 def test_differential_vs_reference_writer(colf_spark, tmp_path):
     """Differential fidelity: ingest a mixed CSV with both pipelines,
     read both .colf outputs with our codec, values must agree."""
