@@ -9,8 +9,8 @@ filter: ~10 bits/row buys a ~1% false-positive rate, so an
 `id = 'x'` lookup opens ~1 file + 1% of the rest instead of all of
 them. The reference has no dataset or statistics concept at all
 (metadata is offsets+sizes only — SURVEY.md §4.2); this lives beside
-`_manifest.json` as `_blooms.json` so every file stays byte-readable
-by the reference reader.
+the `_manifests/` zone maps as `_blooms/` sidecar shards so every file
+stays byte-readable by the reference reader.
 
 Determinism contract (same reasons as SCALING.md §5): membership
 hashing derives from md5 over a fixed byte encoding of the value —
@@ -99,7 +99,7 @@ def build(values: Iterable[bytes], n_hint: int,
     """Build a serializable filter over pre-encoded values. ``n_hint``
     sizes the filter (distinct-count upper bound: row count is fine —
     oversizing only lowers fpp). Returns the JSON-ready dict stored in
-    the ``_blooms.json`` sidecar."""
+    the ``_blooms/`` sidecar."""
     m, k = _params(n_hint, fpp)
     bits = bytearray((m + 7) // 8)
     n_added = 0

@@ -153,23 +153,8 @@ class ColfInputPartition(InputPartition):
     evo: tuple | None = None
 
 
-MANIFEST_NAME = "_manifest.json"
-
-
-def manifest_path(dataset_dir: str) -> str:
-    return os.path.join(dataset_dir, MANIFEST_NAME)
-
-
-SNAPSHOTS_NAME = "_snapshots.json"
-
 # ---------------------------------------------------------------------------
-# Metadata log, format v2: SHARDED (round-10 verdict item #1).
-#
-# The v1 log is ONE `_snapshots.json` holding every commit with its FULL
-# live-file list — every commit rewrites the whole file, so metadata
-# write cost is O(commits x files): the exact scale wall Iceberg's
-# manifest-list/manifest split and Delta's checkpointed delta-log exist
-# to remove. v2 stores the log as a DIRECTORY of per-commit files:
+# Metadata log: a DIRECTORY of per-commit files.
 #
 #   _log/v000000000007.json        one commit. Either SELF-CONTAINED
 #                                  ("files": [...]) or a DELTA against
@@ -181,33 +166,25 @@ SNAPSHOTS_NAME = "_snapshots.json"
 #                                  table_schema, eq_deletes, branch,
 #                                  staged, ...) are stored verbatim —
 #                                  they are small.
-#   _log/v000000000020.ckpt.json   DERIVED checkpoint: the fully
+#   _log/v000000000020.ckpt.jz     DERIVED checkpoint: the fully
 #                                  materialized entry for that version,
 #                                  written every LOG_CHECKPOINT_EVERY
 #                                  commits so head/single-version reads
 #                                  fold a bounded number of deltas
 #                                  (Delta's checkpoint.parquet role).
 #
-# A commit now writes ONE small delta file — O(the commit's own
+# A commit writes ONE small delta file — O(the commit's own
 # added/removed files), independent of table size — and the file's
-# O_CREAT|O_EXCL creation doubles as the cross-process version CAS
-# (no separate _commits marker needed). `load_snapshots` reconstructs
-# the same self-contained entry list v1 produced, so every consumer
-# (time travel, CDC, vacuum, branches, WAP) is format-agnostic.
-#
-# Compatibility: a dataset with a v1 `_snapshots.json` and no `_log/`
-# keeps appending v1 (no silent migration; maintenance.migrate_log
-# converts). NEW and overwritten datasets are always v2. When both
-# exist, `_log/` is authoritative (a crash after migration wrote
-# `_log/` may leave the stale v1 file).
+# O_EXCL publication doubles as the cross-process version CAS (the
+# Iceberg manifest-list / Delta checkpointed delta-log model).
+# `load_snapshots` reconstructs the self-contained entry list, so
+# every consumer (time travel, CDC, vacuum, branches, WAP) sees whole
+# snapshots. A directory without `_log/` has no log: its live set is
+# the directory listing (reference-writer output, hand-made dirs).
 # ---------------------------------------------------------------------------
 
 LOG_DIR_NAME = "_log"
 LOG_CHECKPOINT_EVERY = 20
-
-
-def snapshots_path(dataset_dir: str) -> str:
-    return os.path.join(dataset_dir, SNAPSHOTS_NAME)
 
 
 def log_dir(dataset_dir: str) -> str:
@@ -227,47 +204,33 @@ _LOG_ENTRY_RE = None
 
 
 def _parse_log_name(name: str):
-    """(version, is_ckpt) for a _log/ member, else None. Accepts both
-    checkpoint encodings: `.ckpt.jz` (zlib JSON, current) and
-    `.ckpt.json` (plain, written by pre-round-12 builds)."""
+    """(version, is_ckpt) for a _log/ member (`v<N>.json` commit entry
+    or `v<N>.ckpt.jz` checkpoint), else None — tmp files and any other
+    name are not log members."""
     global _LOG_ENTRY_RE
     if _LOG_ENTRY_RE is None:
         import re
 
-        _LOG_ENTRY_RE = re.compile(r"^v(\d{12})(\.ckpt)?\.(?:json|jz)$")
+        _LOG_ENTRY_RE = re.compile(r"^v(\d{12})(\.json|\.ckpt\.jz)$")
     m = _LOG_ENTRY_RE.match(name)
     if m is None:
         return None
-    if name.endswith(".jz") and not m.group(2):
-        return None  # compressed form exists only for checkpoints
-    return (int(m.group(1)), bool(m.group(2)))
+    return (int(m.group(1)), m.group(2) == ".ckpt.jz")
 
 
-def is_sharded_log(path: str) -> bool:
-    """True when the dataset's authoritative log is the v2 `_log/`
-    directory (at least one committed entry present). Served from the
-    raw-log cache: a bare listdir here would put an O(commits) dirent
-    scan in front of every metadata read."""
-    d = log_dir(path)
-    if not os.path.isdir(d):
-        return False
-    raw, _ = _read_log_raw_cached(path)
-    return bool(raw)
-
-
-# process-level raw-log cache: a v2 log is MANY small files, and the
+# process-level raw-log cache: the log is MANY small files, and the
 # driver loads the log several times per plan (schema, partitions,
 # writer bootstrap) — at 10^4 commits that is 10^4 opens per call
-# without this. Keyed by the _log dir's (mtime_ns, ino): every commit,
-# vacuum rewrite, and migration creates/renames/removes members IN the
-# dir, bumping its mtime. Entries are treated as immutable by all
+# without this. Keyed by the _log dir's (mtime_ns, ino): every commit
+# and vacuum rewrite creates/renames/removes members IN the dir,
+# bumping its mtime. Entries are treated as immutable by all
 # callers (materialization copies every container it hands out).
 _LOG_RAW_CACHE: dict[str, tuple] = {}
 
 
 def _log_raw_cache_hit(path: str):
     """(raw, ckpt) when the process cache holds a CURRENT copy of the
-    path's v2 log, else None — lets head reads choose the bounded
+    path's log, else None — lets head reads choose the bounded
     cold path (_head_snapshot_cold) instead of forcing the O(commits)
     full read a cache miss would trigger."""
     d = log_dir(path)
@@ -312,9 +275,7 @@ def _log_raw_cache_put(rp: str, item: tuple) -> None:
 def _encode_log_member(name: str, obj) -> bytes:
     """The on-disk encoding of a _log/ member, decided by its NAME:
     zlib-compressed compact JSON for `.jz` checkpoints, plain JSON
-    otherwise — _load_log_member's exact inverse, shared by the live
-    writer (_write_log_member) and migrate_log's staging loop so the
-    wire format cannot drift between them."""
+    otherwise — _load_log_member's exact inverse."""
     import json
     import zlib
 
@@ -343,23 +304,33 @@ def _load_log_member(full: str) -> dict:
         return json.load(f)
 
 
+def _refuse_retired_log(path: str) -> None:
+    """Raise when a logless dataset dir holds the single-file
+    `_snapshots.json` log of early builds. That log is no longer read,
+    and the directory listing is no stand-in for it: after a retained
+    compaction the listing is a superset of the live set and would
+    double-count rows."""
+    if os.path.exists(os.path.join(path, "_snapshots.json")):
+        raise ColfFormatError(
+            f"{path} holds a v1 metadata log (_snapshots.json) and no "
+            f"_log/ dir; the v1 log is no longer read. Convert the "
+            f"dataset to the _log/ layout with an earlier build.")
+
+
 def _read_log_raw(path: str) -> tuple[dict, dict]:
     """({version: raw entry}, {version: checkpoint entry}) from the
-    v2 log dir. Raw entries are deltas or self-contained; checkpoints
-    are always self-contained. Corrupt members raise like a corrupt v1
-    log — a dataset that ever had a log must not silently degrade to
-    directory-listing semantics."""
-    import json
-
+    log dir. Raw entries are deltas or self-contained; checkpoints
+    are always self-contained. Corrupt members raise — a dataset that
+    ever had a log must not silently degrade to directory-listing
+    semantics. No `_log/` dir is the defined empty state (a logless
+    dir, or one whose log a racing overwrite reset just removed)."""
     d = log_dir(path)
     raw: dict[int, dict] = {}
     ckpt: dict[int, dict] = {}
     try:
         members = sorted(os.listdir(d))
-    except FileNotFoundError:
-        # the _log dir vanished between the caller's isdir check and
-        # this read (a racing to_legacy_log / overwrite reset): an
-        # ABSENT log is the defined empty state, not corruption
+    except (FileNotFoundError, NotADirectoryError):
+        _refuse_retired_log(path)
         return raw, ckpt
     for n in members:
         p = _parse_log_name(n)
@@ -385,7 +356,7 @@ def _read_log_raw(path: str) -> tuple[dict, dict]:
 
 def _materialize_entry(v: int, raw: dict, ckpt: dict, memo: dict) -> dict:
     """Reconstruct version ``v``'s self-contained snapshot entry from
-    the delta-encoded v2 log. Recursive along each entry's ``base``
+    the delta-encoded log. Recursive along each entry's ``base``
     chain with memoization; checkpoints short-circuit the fold."""
     if v == 0:
         return {"files": [], "deletes": [], "eq_deletes": []}
@@ -465,62 +436,39 @@ def _materialize_entry(v: int, raw: dict, ckpt: dict, memo: dict) -> dict:
 def load_snapshots(path: str) -> list[dict]:
     """Ascending list of ``{"version": int, "files": [basenames]}``
     commits — the dataset's Iceberg-style metadata log, materialized
-    self-contained regardless of the physical format (v1 monolithic
-    `_snapshots.json` or v2 sharded `_log/`). Empty when ABSENT
+    self-contained from the `_log/` deltas. Empty when ABSENT
     (pre-snapshot datasets, reference-writer dirs: directory-listing
     semantics are exactly right there). A PRESENT but unparseable log
     raises instead: after a retained compaction the directory listing
     is a superset of the live set, so silently degrading to listing
     semantics would double-count rows — a dataset that ever had a log
     must not serve reads without it."""
-    import json
-
-    if not os.path.isdir(path):
-        return []
-    if is_sharded_log(path):
-        raw, ckpt = _read_log_raw_cached(path)
-        memo: dict = {}
-        out = []
-        for v in sorted(raw):
-            try:
-                out.append(_materialize_entry(v, raw, ckpt, memo))
-            except ColfFormatError:
-                # an entry whose base chain was pruned mid-vacuum:
-                # skip it (the kept lineage is rewritten self-contained
-                # BEFORE pruned entries are deleted, so only versions
-                # being vacuumed can be orphaned)
-                if v == max(raw):
-                    raise  # the head must always materialize
-        return out
-    sp = snapshots_path(path)
-    if not os.path.exists(sp):
-        return []
-    try:
-        with open(sp) as f:
-            snaps = json.load(f)
-        return sorted(snaps, key=lambda s: s["version"])
-    except (OSError, ValueError, KeyError, TypeError) as exc:
-        raise ColfFormatError(
-            f"corrupt metadata log at {sp}: {exc}; refusing to fall "
-            f"back to the directory listing (it may be a superset of "
-            f"the live set after a retained compaction). Restore the "
-            f"log or delete it to explicitly adopt listing semantics."
-        ) from exc
+    raw, ckpt = _read_log_raw_cached(path)
+    memo: dict = {}
+    out = []
+    for v in sorted(raw):
+        try:
+            out.append(_materialize_entry(v, raw, ckpt, memo))
+        except ColfFormatError:
+            # an entry whose base chain was pruned mid-vacuum:
+            # skip it (the kept lineage is rewritten self-contained
+            # BEFORE pruned entries are deleted, so only versions
+            # being vacuumed can be orphaned)
+            if v == max(raw):
+                raise  # the head must always materialize
+    return out
 
 
 def load_snapshots_meta(path: str) -> list[dict]:
     """Ascending log entries with METADATA KEYS ONLY — ``files`` (and
-    the delete lists) may be ABSENT on v2 delta entries; callers
+    the delete lists) may be ABSENT on delta entries; callers
     needing file lists materialize the specific versions they want
     with ``materialize_log_versions``. This is the O(commits) view
     retention planning (vacuum/compact_log) and head checks read —
-    never O(commits x files). v1 logs return the full entries (they
-    are stored materialized anyway). READ-ONLY: v2 dicts are the
-    process cache's own objects."""
-    if os.path.isdir(path) and is_sharded_log(path):
-        raw, _ = _read_log_raw_cached(path)
-        return [raw[v] for v in sorted(raw)]
-    return load_snapshots(path)
+    never O(commits x files). READ-ONLY: the dicts are the process
+    cache's own objects."""
+    raw, _ = _read_log_raw_cached(path)
+    return [raw[v] for v in sorted(raw)]
 
 
 def materialize_log_versions(path: str, versions,
@@ -534,25 +482,22 @@ def materialize_log_versions(path: str, versions,
     its head-must-materialize rule, which is the caller's to enforce)
     instead of raising — retention planning and summaries must keep
     working on a dataset whose recovery is 'run vacuum again'."""
-    versions = list(versions)
-    if os.path.isdir(path) and is_sharded_log(path):
-        raw, ckpt = _read_log_raw_cached(path)
-        memo: dict = {}
-        out: dict[int, dict] = {}
-        for v in versions:
-            try:
-                out[v] = _materialize_entry(v, raw, ckpt, memo)
-            except ColfFormatError:
-                if not skip_broken:
-                    raise
-        return out
-    want = set(versions)
-    return {s["version"]: s for s in load_snapshots(path)
-            if s["version"] in want}
+    raw, ckpt = _read_log_raw_cached(path)
+    memo: dict = {}
+    out: dict[int, dict] = {}
+    if not raw:
+        return out  # logless dir: no versions to materialize
+    for v in versions:
+        try:
+            out[v] = _materialize_entry(v, raw, ckpt, memo)
+        except ColfFormatError:
+            if not skip_broken:
+                raise
+    return out
 
 
 def _delta_encode_entry(entry: dict, base: dict | None) -> dict:
-    """The v2 delta form of a self-contained entry against ``base``
+    """The delta form of a self-contained entry against ``base``
     (None = encode self-contained). Round-trips exactly through
     _materialize_entry."""
     if base is None:
@@ -730,7 +675,7 @@ def _write_log_member(path: str, name: str, obj, excl: bool) -> None:
 def _append_sharded_entry(path: str, base: dict | None,
                           entry: dict, reset: bool,
                           cache_seed: tuple | None = None) -> None:
-    """The v2 commit: ONE O(commit-delta) entry file, O_EXCL-created
+    """The commit: ONE O(commit-delta) entry file, O_EXCL-created
     (doubling as the cross-process version CAS), plus a periodic
     derived checkpoint. ``base`` is the entry's MATERIALIZED lineage
     parent (None for reset / first commit) — the caller computes it
@@ -752,16 +697,6 @@ def _append_sharded_entry(path: str, base: dict | None,
         if os.path.isdir(d):
             shutil.rmtree(d, ignore_errors=True)
         _invalidate_log_cache(path)
-        # a reset also supersedes any v1 log file left by a legacy
-        # dataset being overwritten — including its _commits markers,
-        # which would otherwise outlive the overwrite and block a
-        # later to_legacy_log lineage's low versions
-        try:
-            os.remove(snapshots_path(path))
-        except OSError:
-            pass
-        shutil.rmtree(os.path.join(path, COMMIT_MARKERS_DIR),
-                      ignore_errors=True)
         base = None
         cache_seed = ({}, {})
     version = entry["version"]
@@ -819,7 +754,7 @@ def _append_sharded_entry(path: str, base: dict | None,
 
 def _delta_encode_history(snaps: list[dict]) -> dict[str, dict]:
     """``{member_name: obj}`` re-encoding a FULL materialized history
-    in the v2 delta form, with the SAME base choice as the live commit
+    in the delta form, with the SAME base choice as the live commit
     path (published entries base on the previous published version —
     the invariant the streaming incremental fold relies on; staged
     entries base on their parent; branch commits chain per branch).
@@ -864,88 +799,68 @@ def _delta_encode_history(snaps: list[dict]) -> dict[str, dict]:
 
 
 def write_snapshots(path: str, snaps: list[dict]) -> None:
-    """FULL log rewrite (vacuum's prune, migration, tests). For a v2
-    log the kept entries are rewritten in ASCENDING version order as
-    delta entries over kept bases (oldest self-contained), then
-    entries outside the kept set are deleted — at every intermediate
-    state each entry's base chain resolves (a new entry's base is an
-    already-rewritten kept entry; an old entry's base is a pruned
-    entry that still exists until the delete phase), so a crash
-    mid-way leaves extra readable versions for the next vacuum, never
-    a broken chain."""
-    import json
+    """FULL log rewrite (vacuum's prune, tests). The kept entries are
+    rewritten in ASCENDING version order as delta entries over kept
+    bases (oldest self-contained), then entries outside the kept set
+    are deleted — at every intermediate state each entry's base chain
+    resolves (a new entry's base is an already-rewritten kept entry;
+    an old entry's base is a pruned entry that still exists until the
+    delete phase), so a crash mid-way leaves extra readable versions
+    for the next vacuum, never a broken chain."""
+    import time as _time
 
-    if is_sharded_log(path) or not os.path.exists(snapshots_path(path)):
-        keep_data = _delta_encode_history(snaps)
-        d = log_dir(path)
-        os.makedirs(d, exist_ok=True)
-        for name, obj in keep_data.items():
-            _write_log_member(path, name, obj, excl=False)
-        import time as _time
-
-        for n in os.listdir(d):
-            full = os.path.join(d, n)
-            if ".tmp-" in n:
-                # a crashed writer's leftover — but ONLY past a grace
-                # period: the dataset lock is in-process, so another
-                # PROCESS may be mid-atomic-publish right now, and
-                # sweeping its seconds-old tmp would fail its os.link
-                # with an un-retryable FileNotFoundError
-                try:
-                    if _time.time() - os.path.getmtime(full) > 3600:
-                        os.remove(full)
-                except OSError:
-                    pass
-                continue
-            if _parse_log_name(n) is not None and n not in keep_data:
-                try:
+    keep_data = _delta_encode_history(snaps)
+    d = log_dir(path)
+    os.makedirs(d, exist_ok=True)
+    for name, obj in keep_data.items():
+        _write_log_member(path, name, obj, excl=False)
+    for n in os.listdir(d):
+        full = os.path.join(d, n)
+        if ".tmp-" in n:
+            # a crashed writer's leftover — but ONLY past a grace
+            # period: the dataset lock is in-process, so another
+            # PROCESS may be mid-atomic-publish right now, and
+            # sweeping its seconds-old tmp would fail its os.link
+            # with an un-retryable FileNotFoundError
+            try:
+                if _time.time() - os.path.getmtime(full) > 3600:
                     os.remove(full)
-                except OSError:
-                    pass
-        _invalidate_log_cache(path)
-        return
-    # uuid-suffixed tmp: a fixed name lets two processes interleave
-    # open/rename and publish a torn log (same fix as write_refs)
-    tmp = snapshots_path(path) + ".tmp-" + uuid.uuid4().hex[:8]
-    with open(tmp, "w") as f:
-        json.dump(snaps, f)
-    os.rename(tmp, snapshots_path(path))
+            except OSError:
+                pass
+            continue
+        if _parse_log_name(n) is not None and n not in keep_data:
+            try:
+                os.remove(full)
+            except OSError:
+                pass
+    _invalidate_log_cache(path)
 
 
 def log_mtime(path: str) -> float:
-    """Last-modified time of the metadata log (v1 file or newest v2
-    member) — vacuum's age anchor."""
-    if is_sharded_log(path):
-        d = log_dir(path)
-        return max(os.path.getmtime(os.path.join(d, n))
-                   for n in os.listdir(d)
-                   if _parse_log_name(n) is not None)
-    return os.path.getmtime(snapshots_path(path))
+    """Last-modified time of the metadata log (its newest member) —
+    vacuum's age anchor."""
+    d = log_dir(path)
+    return max(os.path.getmtime(os.path.join(d, n))
+               for n in os.listdir(d)
+               if _parse_log_name(n) is not None)
 
 
 def log_fingerprint(path: str) -> bytes:
-    """Digest of the raw committed log bytes (v1 file, or every v2
-    non-checkpoint member in name order) — 'the log did not change'
-    assertions, format-agnostic."""
+    """Digest of the raw committed log bytes (every non-checkpoint
+    member in name order) — 'the log did not change' assertions."""
     import hashlib
 
     h = hashlib.sha256()
-    if is_sharded_log(path):
-        d = log_dir(path)
-        for n in sorted(os.listdir(d)):
-            p = _parse_log_name(n)
-            if p is None or p[1]:
-                continue
-            h.update(n.encode())
-            with open(os.path.join(d, n), "rb") as fh:
-                h.update(fh.read())
-        return h.digest()
-    with open(snapshots_path(path), "rb") as fh:
-        h.update(fh.read())
+    d = log_dir(path)
+    for n in sorted(os.listdir(d)):
+        p = _parse_log_name(n)
+        if p is None or p[1]:
+            continue
+        h.update(n.encode())
+        with open(os.path.join(d, n), "rb") as fh:
+            h.update(fh.read())
     return h.digest()
 
-
-COMMIT_MARKERS_DIR = "_commits"
 
 _COMMIT_LOCKS: dict[str, object] = {}
 _COMMIT_LOCKS_GUARD = None  # initialized lazily to keep import cheap
@@ -957,8 +872,8 @@ def dataset_commit_lock(path: str):
     THREADS of one driver process (each Spark write task commits from
     the driver-side Python data source), so an in-process lock makes
     the optimistic ``expected_parent`` check atomic for every writer
-    this process hosts; _claim_commit_version extends the guarantee
-    across processes."""
+    this process hosts; the O_EXCL log-entry publication
+    (_append_sharded_entry) extends the guarantee across processes."""
     import threading
 
     global _COMMIT_LOCKS_GUARD
@@ -967,35 +882,6 @@ def dataset_commit_lock(path: str):
     key = os.path.realpath(path)
     with _COMMIT_LOCKS_GUARD:
         return _COMMIT_LOCKS.setdefault(key, threading.Lock())
-
-
-def _claim_commit_version(path: str, version: int, reset: bool) -> None:
-    """Cross-process CAS on the version number — the Iceberg
-    HadoopTableOperations model: each commit must atomically create
-    ``_commits/v<N>`` (``O_CREAT|O_EXCL``, atomic on POSIX) before it
-    may write version N into the log. Two processes that both pass the
-    ``expected_parent`` read-check race to this create; exactly one
-    wins, the loser gets the documented retryable error instead of
-    silently clobbering the winner's snapshot. Markers are empty
-    files; ``vacuum()`` sweeps the ones at-or-below the retained
-    horizon. A marker orphaned by a writer that crashed between claim
-    and log write blocks that version until removed by hand — the same
-    manual-intervention window Iceberg has on plain filesystems."""
-    d = os.path.join(path, COMMIT_MARKERS_DIR)
-    if reset:
-        import shutil
-
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    marker = os.path.join(d, f"v{version:012d}")
-    try:
-        os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-    except FileExistsError:
-        raise ColfFormatError(
-            f"concurrent commit detected at {path}: version {version} "
-            f"is already claimed by another writer. The metadata log "
-            f"is single-writer; re-read the live set and retry the "
-            f"commit.") from None
 
 
 REFS_NAME = "_refs.json"
@@ -1122,10 +1008,10 @@ def commit_snapshot(path: str, live_files: list[str],
 
     The check itself is made ATOMIC two ways: a per-dataset in-process
     lock (all of local[*]'s writers are threads of one driver process)
-    and a cross-process ``O_EXCL`` version-marker claim
-    (_claim_commit_version, the Iceberg HadoopTableOperations CAS) —
-    without them check-then-write interleavings could clobber a
-    concurrent commit the check was meant to catch."""
+    and the cross-process ``O_EXCL`` publication of the version's log
+    entry (the Iceberg HadoopTableOperations CAS) — without them
+    check-then-write interleavings could clobber a concurrent commit
+    the check was meant to catch."""
     with dataset_commit_lock(path):
         return _commit_snapshot_locked(
             path, live_files, reset, expected_parent, spec, sort,
@@ -1138,18 +1024,12 @@ def _commit_snapshot_locked(path, live_files, reset, expected_parent,
                             branch, ff_from, cluster, deletes,
                             eq_deletes, data_change,
                             table_schema) -> int:
-    # Metadata-only view of the log: raw v2 entries (cheap, cached —
-    # no file-list materialization; the commit path at 10^4 commits
-    # must not fold the whole history) or the v1 parse. Only the ONE
-    # lineage-base entry is materialized, below.
-    sharded_existing = (not reset and os.path.isdir(path)
-                        and is_sharded_log(path))
-    if sharded_existing:
-        raw, ckpt = _read_log_raw_cached(path)
-        meta = [raw[v] for v in sorted(raw)]
-    else:
-        raw = ckpt = None
-        meta = [] if reset else load_snapshots(path)
+    # Metadata-only view of the log: raw entries (cheap, cached — no
+    # file-list materialization; the commit path at 10^4 commits must
+    # not fold the whole history). Only the ONE lineage-base entry is
+    # materialized, below.
+    raw, ckpt = ({}, {}) if reset else _read_log_raw_cached(path)
+    meta = [raw[v] for v in sorted(raw)]
     current = meta[-1]["version"] if meta else 0
     if not reset and expected_parent is not None and current != expected_parent:
         raise ColfFormatError(
@@ -1158,31 +1038,6 @@ def _commit_snapshot_locked(path, live_files, reset, expected_parent,
             f"metadata log is single-writer; re-read the live set and "
             f"retry the commit.")
     version = current + 1
-    # Which physical log format will this commit append to? An
-    # existing v2 log or a fresh/reset lineage -> v2 (the entry file's
-    # own O_EXCL create is the cross-process CAS); an existing v1 log
-    # keeps appending v1 (no silent migration — maintenance.migrate_log
-    # converts) and needs the separate _commits marker claim.
-    sharded = sharded_existing or reset or (
-        not meta and not os.path.exists(snapshots_path(path)))
-    if not sharded:
-        # a dataset with NO log but leftover markers is a dead
-        # lineage's remnant (the documented delete-the-log-to-adopt-
-        # listing path, or a bootstrap of a reference-writer dir that
-        # was once managed): the first commit of the fresh lineage
-        # sweeps them like reset does, else a stale v1 marker would
-        # block adoption forever. GUARDED (round-10 advice): only when
-        # stale markers actually exist — a genuinely fresh dir (no
-        # _commits at all) keeps full O_CREAT|O_EXCL cross-process CAS
-        # for concurrent bootstraps. The residual window (dead markers
-        # present AND two processes adopting the same logless dir at
-        # once) is the documented adoption trade-off; threads stay
-        # serialized by the dataset lock.
-        markers_dir = os.path.join(path, COMMIT_MARKERS_DIR)
-        stale_markers = (not reset and not meta
-                         and os.path.isdir(markers_dir)
-                         and bool(os.listdir(markers_dir)))
-        _claim_commit_version(path, version, reset or stale_markers)
     import time as _time
 
     # commit wall-clock, for AGE-based retention (vacuum older_than_s —
@@ -1208,7 +1063,7 @@ def _commit_snapshot_locked(path, live_files, reset, expected_parent,
         entry["added"] = sorted(set(added or []))
     if branch == "":
         # an empty branch NAME would straddle the two published-ness
-        # conventions (`is None` on raw v2 entries vs falsy on
+        # conventions (`is None` on raw log entries vs falsy on
         # materialized snapshots) — reject it at the one chokepoint
         # instead of letting the ambiguity reach the on-disk log
         raise ColfFormatError(
@@ -1236,7 +1091,7 @@ def _commit_snapshot_locked(path, live_files, reset, expected_parent,
     # the lineage BASE entry: same-branch tail for branch commits,
     # else the published head — materialized head-only (one fold, not
     # the whole history). It serves BOTH the delete-state inheritance
-    # below and the delta encoding of the sharded append.
+    # below and the delta encoding of the appended entry.
     base_entry: dict | None = None
     if not reset and meta:
         lineage = ([s for s in meta if s.get("branch") == branch]
@@ -1245,17 +1100,13 @@ def _commit_snapshot_locked(path, live_files, reset, expected_parent,
             lineage = published_snapshots(meta)
         if lineage:
             base_v = lineage[-1]["version"]
-            if sharded_existing:
-                # the published head is usually cached materialized
-                # (the previous commit put it there) — the fold from
-                # the nearest checkpoint is the cold fallback
-                h = (_head_cache_get(path) if branch is None else None)
-                base_entry = (h if h is not None
-                              and h.get("version") == base_v
-                              else _materialize_entry(base_v, raw,
-                                                      ckpt, {}))
-            else:
-                base_entry = lineage[-1]
+            # the published head is usually cached materialized (the
+            # previous commit put it there) — the fold from the
+            # nearest checkpoint is the cold fallback
+            h = (_head_cache_get(path) if branch is None else None)
+            base_entry = (h if h is not None
+                          and h.get("version") == base_v
+                          else _materialize_entry(base_v, raw, ckpt, {}))
     if (deletes is None or eq_deletes is None) and base_entry is not None:
         if deletes is None:
             deletes = base_entry.get("deletes")
@@ -1284,30 +1135,25 @@ def _commit_snapshot_locked(path, live_files, reset, expected_parent,
         # {historical name: id}} where the mapping resolves columns of
         # ID-less files (reference-written / pre-evolution)
         entry["table_schema"] = table_schema
-    if sharded:
-        # O(commit) append: one delta entry file; never rewrites the
-        # rest of the log (round-10 verdict item #1)
-        _append_sharded_entry(
-            path, base_entry, entry, reset,
-            cache_seed=(raw, ckpt) if sharded_existing else ({}, {}))
-        # refresh the materialized-head cache: a published commit's
-        # entry IS the new head, fully materialized (we just built
-        # it); a staged commit leaves the published head at its base.
-        # Branch commits just drop the cache (head unchanged but the
-        # re-key is not worth special-casing a rare path — the next
-        # head read is the bounded cold walk).
-        key_now = _log_dir_key(path)
-        if not staged and branch is None:
-            _head_cache_put(path, entry, key_now)
-        elif staged and base_entry is not None:
-            _head_cache_put(path, base_entry, key_now)
-    else:
-        meta.append(entry)
-        write_snapshots(path, meta)
+    # O(commit) append: one delta entry file; never rewrites the rest
+    # of the log
+    _append_sharded_entry(path, base_entry, entry, reset,
+                          cache_seed=(raw, ckpt))
+    # refresh the materialized-head cache: a published commit's entry
+    # IS the new head, fully materialized (we just built it); a staged
+    # commit leaves the published head at its base. Branch commits
+    # just drop the cache (head unchanged but the re-key is not worth
+    # special-casing a rare path — the next head read is the bounded
+    # cold walk).
+    key_now = _log_dir_key(path)
+    if not staged and branch is None:
+        _head_cache_put(path, entry, key_now)
+    elif staged and base_entry is not None:
+        _head_cache_put(path, base_entry, key_now)
     return version
 
 
-_NO_SHARDED = object()   # _head_snapshot_cold: "no committed v2 log"
+_NO_ENTRIES = object()   # _head_snapshot_cold: "no committed entries"
 
 
 def _head_snapshot_cold(path: str):
@@ -1320,12 +1166,12 @@ def _head_snapshot_cold(path: str):
     deliberately does NOT warm the raw-log cache — full-history
     consumers (time travel, CDC, vacuum) pay their own full read.
     Returns the materialized head dict, None (staged/branch-only
-    log), or _NO_SHARDED (no committed v2 entries)."""
+    log), or _NO_ENTRIES (no committed entries)."""
     d = log_dir(path)
     try:
         names = os.listdir(d)
     except FileNotFoundError:
-        return _NO_SHARDED
+        return _NO_ENTRIES
     entry_names: dict[int, str] = {}
     ckpt_names: dict[int, str] = {}
     for n in names:
@@ -1333,7 +1179,7 @@ def _head_snapshot_cold(path: str):
         if p is not None:
             (ckpt_names if p[1] else entry_names)[p[0]] = n
     if not entry_names:
-        return _NO_SHARDED
+        return _NO_ENTRIES
 
     def load(v: int, is_ckpt: bool):
         name = (ckpt_names if is_ckpt else entry_names)[v]
@@ -1391,14 +1237,14 @@ def _head_snapshot_cold(path: str):
 
 def head_snapshot(path: str) -> dict | None:
     """The PUBLISHED head, materialized WITHOUT folding the whole
-    history. A v2 log walks only the head's ``base`` chain with the
+    history. It walks only the head's ``base`` chain with the
     checkpoint short-circuit — O(distance to the nearest checkpoint or
     self-contained entry), not O(commits x files) — which is what
     every PLAN pays (schema, partitions, writer bootstrap all start
     from the head). With a COLD raw-log cache it further bounds the
     I/O itself (_head_snapshot_cold): opens only the chain's members
-    instead of every entry file. v1 logs fall back to the full parse.
-    None when no published snapshot exists (empty/staged-only logs)."""
+    instead of every entry file. None when no published snapshot
+    exists (logless dirs, empty/staged-only logs)."""
     if os.path.isdir(path):
         h = _head_cache_get(path)
         if h is not None:
@@ -1407,7 +1253,7 @@ def head_snapshot(path: str) -> dict | None:
         cached = _log_raw_cache_hit(path)
         if cached is None and os.path.isdir(log_dir(path)):
             got = _head_snapshot_cold(path)
-            if got is not _NO_SHARDED:
+            if got is not _NO_ENTRIES:
                 if got is not None:
                     _head_cache_put(path, got, key0)
                     return _copy_snapshot_entry(got)
@@ -1438,25 +1284,21 @@ def live_files(path: str) -> list[str]:
     # no published snapshot: either no log at all (directory-listing
     # semantics) or a staged/branch-only log — the published table is
     # EMPTY then, never the listing (which would leak staged files)
-    has_log = bool(os.path.isdir(path)
-                   and (is_sharded_log(path) or load_snapshots(path)))
+    has_log = bool(_read_log_raw_cached(path)[0])
     return [] if has_log else dataset_files(path)
 
 
 def _published_meta_entries(path: str) -> list[dict]:
     """Published-lineage entries with METADATA KEYS ONLY — no
     ``files`` materialization — for the reverse scans of the
-    ``current_*`` getters (spec/sort/cluster/table_schema): raw v2
+    ``current_*`` getters (spec/sort/cluster/table_schema): raw
     entries carry every metadata key verbatim, so at 10^4 commits a
     getter reads the cached raw dicts instead of folding the whole
     file history. READ-ONLY: the returned dicts are the process
     cache's own objects."""
-    if os.path.isdir(path) and is_sharded_log(path):
-        raw, _ = _read_log_raw_cached(path)
-        return [raw[v] for v in sorted(raw)
-                if not raw[v].get("staged")
-                and raw[v].get("branch") is None]
-    return published_snapshots(load_snapshots(path))
+    raw, _ = _read_log_raw_cached(path)
+    return [raw[v] for v in sorted(raw)
+            if not raw[v].get("staged") and raw[v].get("branch") is None]
 
 
 _META_COLD_FALLBACK = object()
@@ -1471,14 +1313,13 @@ _META_COLD_CACHE: dict[str, tuple] = {}
 
 
 def _meta_slots_cold(path: str):
-    """BOUNDED cold read of ALL carried-metadata slots from a sharded
-    log: one listdir, then entry opens newest-first only until a
+    """BOUNDED cold read of ALL carried-metadata slots from the log: one listdir, then entry opens newest-first only until a
     checkpoint carrying ``resolved_meta`` — O(entries since that
     checkpoint + staged tail), never O(commits), the
     _head_snapshot_cold discipline for the current_* getters. Like it,
     deliberately does NOT warm the raw-log cache. Returns {slot:
     value-or-None} or _META_COLD_FALLBACK when the walk cannot answer
-    cheaply: no committed v2 log, an unreadable/misnamed member (the
+    cheaply: no committed entries, an unreadable/misnamed member (the
     full read then answers, or raises, the one canonical way), or a
     pre-resolved-checkpoint log where the walk would degrade to
     O(commits) opens — there the single CACHED full read is strictly
@@ -1539,10 +1380,10 @@ def _meta_slots_cold(path: str):
 
 def _current_meta_slot(path: str, slot: str, inh: str):
     """Newest PUBLISHED value of one carried-metadata slot. Warm raw
-    cache → in-memory reverse scan (unchanged cost); cold sharded log
-    → the bounded checkpoint walk, memoized on the log dir's stat key
-    for all four slots at once; v1 logs / unreadable members /
-    pre-resolved-checkpoint logs → the full cached read."""
+    cache → in-memory reverse scan (unchanged cost); cold log → the
+    bounded checkpoint walk, memoized on the log dir's stat key for
+    all four slots at once; unreadable members / pre-resolved-
+    checkpoint logs → the full cached read."""
     if os.path.isdir(path) and _log_raw_cache_hit(path) is None:
         key = _log_dir_key(path)
         if key is not None:
@@ -1676,21 +1517,18 @@ def current_clustering(path: str) -> list[str] | None:
 
 
 # ---------------------------------------------------------------------------
-# Sharded per-file-keyed sidecars (round-10 verdict item #1, half two).
+# Sharded per-file-keyed sidecars: the zone-map manifest and the Bloom
+# filters, each a dict {file basename: entry}.
 #
-# `_manifest.json` and `_blooms.json` were single per-dataset dicts
-# {file basename: entry} rewritten WHOLE under the commit lock on
-# every commit — O(table) metadata bytes per commit and a lock-held
-# serialize. v2 stores each commit's entries as one immutable SHARD
-# file (`_manifests/s-<uuid>.json`, `_blooms/s-<uuid>.json`): an
-# append WRITES ONE NEW FILE (no lock, no read-modify-write — entries
-# are keyed by immutable uuid data-file basenames, so shards never
-# conflict), and readers union the legacy file (if any) with every
-# shard. Entry drops (vacuum / orphan sweep) rewrite only the shards
-# that contain the dropped keys; when the shard count passes
-# SIDECAR_COMPACT_SHARDS the next locked operation folds them into
-# one (Iceberg's manifest-rewrite role). Legacy monolithic files keep
-# working read-side forever.
+# Each commit's entries are one immutable SHARD file
+# (`_manifests/s-<uuid>.json`, `_blooms/s-<uuid>.json`): an append
+# WRITES ONE NEW FILE (no lock, no read-modify-write — entries are
+# keyed by immutable uuid data-file basenames, so shards never
+# conflict), and readers union every shard. Entry drops (vacuum /
+# orphan sweep) rewrite only the shards that contain the dropped
+# keys; when the shard count passes SIDECAR_COMPACT_SHARDS the next
+# locked operation folds them into one (Iceberg's manifest-rewrite
+# role).
 # ---------------------------------------------------------------------------
 
 MANIFEST_DIR_NAME = "_manifests"
@@ -1724,7 +1562,7 @@ def _load_one_json(fp: str) -> dict:
 # manifest/bloom union is re-parsed from every shard on each pruning
 # plan — at 10^5-file manifests that is tens of MB of JSON per plan.
 # Keyed by the full physical state of the family: one (name, mtime_ns,
-# size, ino) part per shard plus one for the legacy file. Every
+# size, ino) part per shard. Every
 # mutation path changes the key — appends add a part, drops/compaction
 # rename-replace shards (fresh inode), resets empty the set — so
 # correctness never depends on explicit invalidation. Cached dicts are
@@ -1732,18 +1570,12 @@ def _load_one_json(fp: str) -> dict:
 _SIDECAR_CACHE: dict[tuple[str, str], tuple] = {}
 
 
-def _sidecar_key(path: str, legacy_file: str, dirname: str):
-    """The cache key of one sidecar family RIGHT NOW: stat of the
-    legacy file (if any) + stat of every shard, in shard-name order.
-    None when a shard vanishes mid-stat (racing compaction) — the
-    caller then skips the cache for this read."""
+def _sidecar_key(path: str, dirname: str):
+    """The cache key of one sidecar family RIGHT NOW: stat of every
+    shard, in shard-name order. None when a shard vanishes mid-stat
+    (racing compaction) — the caller then skips the cache for this
+    read."""
     parts = []
-    lf = os.path.join(path, legacy_file)
-    try:
-        st = os.stat(lf)
-        parts.append(("L", st.st_mtime_ns, st.st_size, st.st_ino))
-    except OSError:
-        pass
     for fp in _shard_files(path, dirname):
         try:
             st = os.stat(fp)
@@ -1779,9 +1611,8 @@ def _sidecar_cache_put(ck: tuple, key: tuple, value: dict) -> None:
         _SIDECAR_CACHE[ck] = (key, value)
 
 
-def _load_sharded_dict(path: str, legacy_file: str, dirname: str) -> dict:
-    """Union of the legacy monolithic sidecar (if present) and every
-    shard. Duplicate keys are benign: data files are write-once under
+def _load_sharded_dict(path: str, dirname: str) -> dict:
+    """Union of every shard. Duplicate keys are benign: data files are write-once under
     uuid basenames, so two shards carrying the same key carry the
     same entry (a crashed shard compaction leaves exactly that).
     Process-cached on the family's full stat key; the key is captured
@@ -1789,14 +1620,11 @@ def _load_sharded_dict(path: str, legacy_file: str, dirname: str) -> dict:
     the cached copy stale-keyed, never stale-served). The returned
     dict may be the cache's own object: callers must not mutate it."""
     ck = (os.path.realpath(path), dirname)
-    key = _sidecar_key(path, legacy_file, dirname)
+    key = _sidecar_key(path, dirname)
     hit = _SIDECAR_CACHE.get(ck)
     if key is not None and hit is not None and hit[0] == key:
         return hit[1]
     out: dict = {}
-    lf = os.path.join(path, legacy_file)
-    if os.path.exists(lf):
-        out.update(_load_one_json(lf))
     for fp in _shard_files(path, dirname):
         out.update(_load_one_json(fp))
     if key is not None:
@@ -1804,18 +1632,11 @@ def _load_sharded_dict(path: str, legacy_file: str, dirname: str) -> dict:
     return out
 
 
-def _sidecar_legacy_name(dirname: str) -> str:
-    return MANIFEST_NAME if dirname == MANIFEST_DIR_NAME else BLOOMS_NAME
-
-
-def _append_sidecar_shard(path: str, dirname: str, entries: dict,
-                          compact: bool = True) -> None:
+def _append_sidecar_shard(path: str, dirname: str, entries: dict) -> None:
     """O(commit) sidecar append: one new immutable shard file, no
     lock, no read of existing state. Opportunistically folds shards
     when they pile up (locked; crash-safe because the union is
-    idempotent). ``compact=False`` for callers that already HOLD the
-    dataset commit lock (migrate_log) — the fold re-acquires the
-    non-reentrant lock and would self-deadlock.
+    idempotent).
 
     Refreshes the parsed-sidecar cache IN PLACE (old dict + these
     entries) when the post-append key is exactly the cached key plus
@@ -1836,12 +1657,12 @@ def _append_sidecar_shard(path: str, dirname: str, entries: dict,
     os.rename(tmp, os.path.join(d, shard_name))
     ck = (os.path.realpath(path), dirname)
     hit = _SIDECAR_CACHE.pop(ck, None)
-    if compact and len(_shard_files(path, dirname)) > SIDECAR_COMPACT_SHARDS:
+    if len(_shard_files(path, dirname)) > SIDECAR_COMPACT_SHARDS:
         _compact_sidecar_shards(path, dirname)
         return
     if hit is None:
         return
-    key = _sidecar_key(path, _sidecar_legacy_name(dirname), dirname)
+    key = _sidecar_key(path, dirname)
     if key is None:
         return
     old_parts, new_parts = set(hit[0]), set(key)
@@ -1854,17 +1675,14 @@ def _append_sidecar_shard(path: str, dirname: str, entries: dict,
 
 
 def _compact_sidecar_shards(path: str, dirname: str) -> None:
-    """Fold all shards into one (plus the legacy file's entries, which
-    it then supersedes — the legacy file is deleted). Locked; write-
-    then-delete ordering keeps every intermediate state a correct
-    union (duplicates carry identical entries)."""
+    """Fold all shards into one. Locked; write-then-delete ordering
+    keeps every intermediate state a correct union (duplicates carry
+    identical entries)."""
     import json
 
-    legacy_file = (MANIFEST_NAME if dirname == MANIFEST_DIR_NAME
-                   else BLOOMS_NAME)
     with dataset_commit_lock(path):
         olds = _shard_files(path, dirname)
-        merged = _load_sharded_dict(path, legacy_file, dirname)
+        merged = _load_sharded_dict(path, dirname)
         if not merged:
             return
         d = _shard_dir(path, dirname)
@@ -1877,36 +1695,18 @@ def _compact_sidecar_shards(path: str, dirname: str) -> None:
                 os.remove(fp)
             except OSError:
                 pass
-        lf = os.path.join(path, legacy_file)
-        if os.path.exists(lf):
-            try:
-                os.remove(lf)
-            except OSError:
-                pass
 
 
-def _drop_sidecar_keys(path: str, legacy_file: str, dirname: str,
-                       keys) -> None:
-    """Remove entries from whichever physical pieces hold them —
-    rewrites ONLY the affected shards (and the legacy file when it
-    contains a key). Locked: concurrent drops/compactions would race
-    the rewrite-in-place."""
+def _drop_sidecar_keys(path: str, dirname: str, keys) -> None:
+    """Remove entries from whichever shards hold them — rewrites ONLY
+    the affected shards. Locked: concurrent drops/compactions would
+    race the rewrite-in-place."""
     import json
 
     keys = set(keys)
     if not keys:
         return
     with dataset_commit_lock(path):
-        lf = os.path.join(path, legacy_file)
-        if os.path.exists(lf):
-            cur = _load_one_json(lf)
-            if keys & set(cur):
-                for k in keys:
-                    cur.pop(k, None)
-                tmp = lf + ".tmp-" + uuid.uuid4().hex[:8]
-                with open(tmp, "w") as f:
-                    json.dump(cur, f)
-                os.rename(tmp, lf)
         for fp in _shard_files(path, dirname):
             cur = _load_one_json(fp)
             if not (keys & set(cur)):
@@ -1927,14 +1727,14 @@ def _drop_sidecar_keys(path: str, legacy_file: str, dirname: str,
 
 def load_manifest(path: str) -> dict:
     """{file basename: {"num_rows": n, "columns": {name: {"min","max",
-    "null_count"}}}} — the union of the legacy `_manifest.json` (if
-    present) and the `_manifests/` shards. Empty when absent (e.g.
+    "null_count"}}}} — the union of the `_manifests/` shards. Empty
+    when absent (e.g.
     files written by the reference writer dropped into the dataset
     dir). Process-cached: READ-ONLY to callers — copy before
     mutating."""
     if not os.path.isdir(path):
         return {}
-    return _load_sharded_dict(path, MANIFEST_NAME, MANIFEST_DIR_NAME)
+    return _load_sharded_dict(path, MANIFEST_DIR_NAME)
 
 
 def _load_delete_file(fp: str):
@@ -2050,26 +1850,23 @@ def file_first_versions(snaps: list[dict]) -> dict[str, int]:
 
 def live_file_first_versions(path: str) -> dict[str, int]:
     """``file_first_versions`` computed WITHOUT materializing the
-    history on a v2 log: one forward pass over the cached raw entries
-    — published deltas' ``files_add`` ARE each version's new files,
+    history: one forward pass over the cached raw entries —
+    published deltas' ``files_add`` ARE each version's new files,
     self-contained entries (replay basis, post-vacuum) contribute
     their full list, ``inherited_fseq`` keeps precedence. O(files +
-    commits), vs the O(commits x files) full fold. v1 logs fall back
-    (they are stored materialized anyway)."""
-    if os.path.isdir(path) and is_sharded_log(path):
-        raw, _ = _read_log_raw_cached(path)
-        seq: dict[str, int] = {}
-        for v in sorted(raw):
-            e = raw[v]
-            for b, fv in (e.get("inherited_fseq") or {}).items():
-                seq.setdefault(b, fv)
-            if e.get("staged") or e.get("branch") is not None:
-                continue  # sequence numbers assign at publish
-            for b in (e["files"] if "files" in e
-                      else e.get("files_add") or ()):
-                seq.setdefault(b, v)
-        return seq
-    return file_first_versions(load_snapshots(path))
+    commits), vs the O(commits x files) full fold."""
+    raw, _ = _read_log_raw_cached(path)
+    seq: dict[str, int] = {}
+    for v in sorted(raw):
+        e = raw[v]
+        for b, fv in (e.get("inherited_fseq") or {}).items():
+            seq.setdefault(b, fv)
+        if e.get("staged") or e.get("branch") is not None:
+            continue  # sequence numbers assign at publish
+        for b in (e["files"] if "files" in e
+                  else e.get("files_add") or ()):
+            seq.setdefault(b, v)
+    return seq
 
 
 def delete_file_first_versions(path: str) -> dict[str, int]:
@@ -2078,29 +1875,23 @@ def delete_file_first_versions(path: str) -> dict[str, int]:
     O(commits + sidecars) raw fold (delta entries' ``deletes_add``,
     self-contained entries' full ``deletes`` list). Feeds
     rewrite_delete_files' metadata no-op gate."""
-    if os.path.isdir(path) and is_sharded_log(path):
-        raw, _ = _read_log_raw_cached(path)
-        seq: dict[str, int] = {}
-        for v in sorted(raw):
-            e = raw[v]
-            if e.get("staged") or e.get("branch") is not None:
-                continue
-            lst = (e.get("deletes") if "files" in e
-                   else e.get("deletes_add")) or ()
-            for d in lst:
-                seq.setdefault(d, v)
-        return seq
-    seq = {}
-    for s in published_snapshots(load_snapshots(path)):
-        for d in s.get("deletes") or ():
-            seq.setdefault(d, s["version"])
+    raw, _ = _read_log_raw_cached(path)
+    seq: dict[str, int] = {}
+    for v in sorted(raw):
+        e = raw[v]
+        if e.get("staged") or e.get("branch") is not None:
+            continue
+        lst = (e.get("deletes") if "files" in e
+               else e.get("deletes_add")) or ()
+        for d in lst:
+            seq.setdefault(d, v)
     return seq
 
 
 def snapshot_summaries(path: str) -> list[dict]:
     """One SUMMARY dict per log commit — version, ts, n_files,
     n_delete_files, staged, branch, data_change — computed without
-    materializing any file list on a v2 log: the counts fold along
+    materializing any file list: the counts fold along
     each entry's base chain (len(files_add)/len(files_remove) deltas,
     checkpoint/self-contained short-circuits), so the snapshots
     metadata table over a 10^4-commit, 10^5-file history is an
@@ -2108,14 +1899,6 @@ def snapshot_summaries(path: str) -> list[dict]:
     materialization (round-12 verdict item on metadata tables at
     history scale). Full file LISTS for a specific version come from
     ``materialize_log_versions`` on demand."""
-    if not (os.path.isdir(path) and is_sharded_log(path)):
-        return [{"version": s["version"], "ts": s.get("ts"),
-                 "n_files": len(s["files"]),
-                 "n_delete_files": len(s.get("deletes") or []),
-                 "staged": bool(s.get("staged")),
-                 "branch": s.get("branch"),
-                 "data_change": s.get("data_change")}
-                for s in load_snapshots(path)]
     raw, ckpt = _read_log_raw_cached(path)
     counts: dict[int, tuple] = {}
 
@@ -2470,13 +2253,6 @@ def read_change_partition(partition: ColfChangePartition,
                                      names=wanted)
 
 
-BLOOMS_NAME = "_blooms.json"
-
-
-def blooms_path(dataset_dir: str) -> str:
-    return os.path.join(dataset_dir, BLOOMS_NAME)
-
-
 def load_blooms(path: str) -> dict:
     """{file basename: {"columns": {col: bloom}, "stripes":
     [{col: bloom}, ...]}} per-file (and, for v3 striped files,
@@ -2487,15 +2263,15 @@ def load_blooms(path: str) -> dict:
     callers — copy before mutating."""
     if not os.path.isdir(path):
         return {}
-    return _load_sharded_dict(path, BLOOMS_NAME, BLOOMS_DIR_NAME)
+    return _load_sharded_dict(path, BLOOMS_DIR_NAME)
 
 
 def save_blooms(path: str, blooms: dict) -> None:
-    """FULL replacement of the bloom sidecar state (legacy file +
-    shards wiped, one fresh shard written). Writers and maintenance
+    """FULL replacement of the bloom sidecar state (shards wiped, one
+    fresh shard written). Writers and maintenance
     now APPEND shards / DROP keys instead; this remains for the
     replace-everything paths (tests, explicit rebuilds)."""
-    _reset_sidecar(path, BLOOMS_NAME, BLOOMS_DIR_NAME)
+    _reset_sidecar(path, BLOOMS_DIR_NAME)
     _append_sidecar_shard(path, BLOOMS_DIR_NAME, blooms)
 
 
@@ -2938,7 +2714,7 @@ class ColfReader(DataSourceReader):
         """Record conjuncts usable for manifest file-skipping. ALL
         filters are returned (Spark re-applies them row-level): the
         format has no row groups, so pushdown here means skipping
-        whole files via the _manifest.json zone maps — the same
+        whole files via the _manifests/ zone maps — the same
         design as parquet footer min/max, kept format-compatible by
         living in a sidecar (SURVEY.md §4.3/M6)."""
         self.pushed = [
@@ -3234,7 +3010,7 @@ class ColfReader(DataSourceReader):
 class ColfCommitMessage(WriterCommitMessage):
     file: str | None
     stats: dict | None = None
-    blooms: dict | None = None  # {column: bloom dict} for _blooms.json
+    blooms: dict | None = None  # {column: bloom dict} for _blooms/
     # partitionColumns writes emit one value-homogeneous file per
     # distinct partition tuple the task held: [{"file","stats","blooms"}]
     parts: list | None = None
@@ -3387,7 +3163,7 @@ def _build_blooms(chunks: dict, colf_columns: list[ColfColumn],
 def _build_bloom_entry(chunks: dict, colf_columns: list[ColfColumn],
                        bloom_cols: list[str], fpp: float, num_rows: int,
                        version: int, stripe_rows: int):
-    """The ``_blooms.json`` entry for one part file: file-level blooms
+    """The ``_blooms/`` entry for one part file: file-level blooms
     always; per-STRIPE blooms too for v3 files (stripes are the task
     granule, so an equality probe should prune tasks, not just files —
     the bloom twin of the manifest's per-stripe zone maps)."""
@@ -3413,18 +3189,12 @@ def _build_bloom_entry(chunks: dict, colf_columns: list[ColfColumn],
     return entry
 
 
-def _reset_sidecar(path: str, legacy_file: str, dirname: str) -> None:
-    """Overwrite-mode wipe of one sidecar family (legacy file + every
-    shard), locked against concurrent drops/compactions."""
+def _reset_sidecar(path: str, dirname: str) -> None:
+    """Overwrite-mode wipe of one sidecar family (every shard), locked
+    against concurrent drops/compactions."""
     import shutil
 
     with dataset_commit_lock(path):
-        lf = os.path.join(path, legacy_file)
-        if os.path.exists(lf):
-            try:
-                os.remove(lf)
-            except OSError:
-                pass
         d = _shard_dir(path, dirname)
         if os.path.isdir(d):
             shutil.rmtree(d, ignore_errors=True)
@@ -3437,7 +3207,7 @@ def _merge_bloom_sidecar(path: str, messages, reset: bool = False) -> None:
     conflict; the round-9/10 lost-entry class is gone by
     construction). Overwrite mode wipes the old sidecar first."""
     if reset:
-        _reset_sidecar(path, BLOOMS_NAME, BLOOMS_DIR_NAME)
+        _reset_sidecar(path, BLOOMS_DIR_NAME)
     entries = {os.path.basename(f): per
                for f, _stats, per in _iter_commit_parts(messages) if per}
     _append_sidecar_shard(path, BLOOMS_DIR_NAME, entries)
@@ -3448,11 +3218,11 @@ def _merge_manifest_sidecar(path: str, messages,
     """Record the tasks' per-file zone-map stats: one new immutable
     shard in ``_manifests/`` — same lock-free O(commit) append as
     ``_merge_bloom_sidecar`` (previously a locked whole-dict rewrite
-    of ``_manifest.json``, O(table) per commit)."""
+    of one manifest file, O(table) per commit)."""
     entries = {os.path.basename(f): stats
                for f, stats, _b in _iter_commit_parts(messages) if stats}
     if reset:
-        _reset_sidecar(path, MANIFEST_NAME, MANIFEST_DIR_NAME)
+        _reset_sidecar(path, MANIFEST_DIR_NAME)
     _append_sidecar_shard(path, MANIFEST_DIR_NAME, entries)
 
 
@@ -4362,10 +4132,8 @@ class ColfWriter(DataSourceArrowWriter):
         if self.overwrite and os.path.isdir(self.path):
             for f in os.listdir(self.path):
                 full = os.path.join(self.path, f)
-                if full not in written and (f.endswith(".colf") or f.endswith(".tmp")
-                                            or f == MANIFEST_NAME
-                                            or f == SNAPSHOTS_NAME
-                                            or f == BLOOMS_NAME):
+                if full not in written and (f.endswith(".colf")
+                                            or f.endswith(".tmp")):
                     os.remove(full)
         existing = dataset_files(self.path) if os.path.isdir(self.path) else []
         if not written and not existing:
@@ -4584,39 +4352,28 @@ class ColfStreamReader(DataSourceStreamReader):
         the same isolation batch reads get.
 
         This runs on EVERY latestOffset poll (processingTime triggers
-        poll continuously), so a v2 log folds the raw deltas
-        incrementally — O(commits + files) per poll instead of the
-        full O(commits x files) history materialization. Published
-        delta entries' ``base`` is the previous published version by
-        construction, so ``files_add`` IS the new-file set."""
-        if os.path.isdir(self.path) and is_sharded_log(self.path):
-            raw, _ = _read_log_raw_cached(self.path)
-            out = []
-            prev: set[str] = set()
-            for v in sorted(raw):
-                e = raw[v]
-                if e.get("staged") or e.get("branch") is not None:
-                    continue
-                had_prev = bool(prev)  # the legacy-path baseline rule
-                if "files" in e:  # self-contained (v1 / post-vacuum)
-                    cur = set(e["files"])
-                    new = sorted(cur - prev)
-                    prev = cur
-                else:
-                    new = sorted(e.get("files_add") or [])
-                    prev.difference_update(e.get("files_remove") or ())
-                    prev.update(new)
-                if e.get("data_change") is False and had_prev:
-                    # Delta's dataChange=false skip; the baseline
-                    # exception (first retained commit) keeps its set
-                    new = []
-                out.append((v, new))
-            return out
-        prev2: set[str] = set()
+        poll continuously), so it folds the raw deltas incrementally —
+        O(commits + files) per poll instead of the full O(commits x
+        files) history materialization. Published delta entries'
+        ``base`` is the previous published version by construction, so
+        ``files_add`` IS the new-file set."""
+        raw, _ = _read_log_raw_cached(self.path)
         out = []
-        for s in published_snapshots(load_snapshots(self.path)):
-            cur = set(s["files"])
-            if s.get("data_change") is False and prev2:
+        prev: set[str] = set()
+        for v in sorted(raw):
+            e = raw[v]
+            if e.get("staged") or e.get("branch") is not None:
+                continue
+            had_prev = bool(prev)
+            if "files" in e:  # self-contained (replay basis)
+                cur = set(e["files"])
+                new = sorted(cur - prev)
+                prev = cur
+            else:
+                new = sorted(e.get("files_add") or [])
+                prev.difference_update(e.get("files_remove") or ())
+                prev.update(new)
+            if e.get("data_change") is False and had_prev:
                 # a marked rewrite (compact(retain)/rewrite_delete_
                 # files): its "new" files are reorganizations of rows
                 # already delivered — a tailing stream must NOT
@@ -4624,10 +4381,8 @@ class ColfStreamReader(DataSourceStreamReader):
                 # baseline exception (prev empty): when vacuum pruned
                 # the log down to such a commit, it IS the replay
                 # basis, so a fresh stream takes its full set.
-                out.append((s["version"], []))
-            else:
-                out.append((s["version"], sorted(cur - prev2)))
-            prev2 = cur
+                new = []
+            out.append((v, new))
         return out
 
     def _offset_files(self, off: dict) -> set[str]:
@@ -4666,17 +4421,13 @@ class ColfStreamReader(DataSourceStreamReader):
 
     def _published_versions(self) -> list[int]:
         """Ascending PUBLISHED version numbers only — the changelog
-        latestOffset poll needs nothing else, so a v2 log answers from
-        the cached raw entries (staged/branch are verbatim raw keys)
+        latestOffset poll needs nothing else, so it answers from the
+        cached raw entries (staged/branch are verbatim raw keys)
         instead of materializing the whole O(commits x files) history
         on every trigger."""
-        if os.path.isdir(self.path) and is_sharded_log(self.path):
-            raw, _ = _read_log_raw_cached(self.path)
-            return [v for v in sorted(raw)
-                    if not raw[v].get("staged")
-                    and raw[v].get("branch") is None]
-        return [s["version"]
-                for s in published_snapshots(load_snapshots(self.path))]
+        raw, _ = _read_log_raw_cached(self.path)
+        return [v for v in sorted(raw)
+                if not raw[v].get("staged") and raw[v].get("branch") is None]
 
     def latestOffset(self) -> dict:
         if self._changelog:

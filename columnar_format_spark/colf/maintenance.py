@@ -36,8 +36,6 @@ from .datasource import (
     load_manifest,
     load_refs,
     load_snapshots,
-    MANIFEST_NAME,
-    manifest_path,
     published_snapshots,
     save_blooms,
     write_refs,
@@ -160,10 +158,9 @@ def _drop_manifest_entries(path: str, basenames: list[str]) -> None:
     """Remove reclaimed files' stats from the live manifest — rewrites
     only the shards holding them (vacuum's half of
     _merge_manifest_entries)."""
-    from .datasource import (MANIFEST_DIR_NAME, MANIFEST_NAME,
-                             _drop_sidecar_keys)
+    from .datasource import MANIFEST_DIR_NAME, _drop_sidecar_keys
 
-    _drop_sidecar_keys(path, MANIFEST_NAME, MANIFEST_DIR_NAME, basenames)
+    _drop_sidecar_keys(path, MANIFEST_DIR_NAME, basenames)
 
 
 # merge_into plans its touched files from the source's key VALUES (IN
@@ -210,120 +207,6 @@ def _key_ndv_estimate(path: str, key_cols) -> float | None:
     if total_rows is not None:
         est = min(est, float(max(total_rows, 1)))
     return est
-
-
-def migrate_log(path: str) -> dict:
-    """Convert a dataset's v1 MONOLITHIC metadata (one `_snapshots.json`
-    rewritten whole per commit, plus whole-dict `_manifest.json` /
-    `_blooms.json`) to the SHARDED v2 layout (`_log/` per-commit delta
-    entries + checkpoint, `_manifests/` / `_blooms/` immutable shards)
-    — the Iceberg manifest-list / Delta checkpointed-delta-log model
-    that makes every later commit's metadata write O(that commit), not
-    O(table). Metadata-only: zero data bytes move and the logical
-    history is IDENTICAL before and after (load_snapshots, time
-    travel, CDC, branches, refs all read both formats).
-
-    Crash-safe: the new log is staged in a tmp dir and adopted with
-    one atomic dir rename (readers treat `_log/` as authoritative the
-    instant it exists); the superseded v1 files are removed after —
-    a crash in between leaves stale-but-ignored v1 files that a re-run
-    or remove_orphan_files clears. Returns a summary dict."""
-    import shutil
-
-    from .datasource import (BLOOMS_DIR_NAME, BLOOMS_NAME,
-                             MANIFEST_DIR_NAME, _append_sidecar_shard,
-                             dataset_commit_lock, is_sharded_log, log_dir,
-                             snapshots_path)
-    from .format import ColfFormatError
-
-    with dataset_commit_lock(path):
-        if is_sharded_log(path):
-            return {"migrated": False, "reason": "already sharded"}
-        snaps = load_snapshots(path)
-        if not snaps:
-            raise ColfFormatError(
-                f"no metadata log to migrate at {path} (logless "
-                f"datasets have directory-listing semantics; write "
-                f"through the connector first)")
-        staging = log_dir(path) + f".tmp-{uuid.uuid4().hex[:8]}"
-        os.makedirs(staging)
-        # re-derive each entry's delta against its lineage base —
-        # identical base choice AND wire encoding to the live commit
-        # path (shared with write_snapshots' vacuum rewrite)
-        from .datasource import _delta_encode_history, _encode_log_member
-
-        for name, obj in _delta_encode_history(snaps).items():
-            with open(os.path.join(staging, name), "wb") as f:
-                f.write(_encode_log_member(name, obj))
-        os.rename(staging, log_dir(path))  # the adoption point
-        try:
-            os.remove(snapshots_path(path))
-        except OSError:
-            pass
-        # monolithic sidecars -> one shard each, then drop the files
-        for legacy, dirname, loader in (
-                (MANIFEST_NAME, MANIFEST_DIR_NAME, load_manifest),
-                (BLOOMS_NAME, BLOOMS_DIR_NAME, load_blooms)):
-            lf = os.path.join(path, legacy)
-            if os.path.exists(lf):
-                # compact=False: we HOLD the dataset commit lock, and
-                # the opportunistic shard fold re-acquires it
-                _append_sidecar_shard(path, dirname, loader(path),
-                                      compact=False)
-                try:
-                    os.remove(lf)
-                except OSError:
-                    pass
-        shutil.rmtree(os.path.join(path, "_commits"), ignore_errors=True)
-        return {"migrated": True, "snapshots": len(snaps),
-                "head": snaps[-1]["version"]}
-
-
-def to_legacy_log(path: str) -> dict:
-    """The inverse of ``migrate_log``: fold a sharded v2 metadata
-    layout back into the monolithic v1 files. Exists for
-    compatibility export (hand a dataset to a v1-era reader) and as
-    the test/oracle fixture that PROVES migrate_log's round-trip
-    (q213). Same crash ordering: the v1 files are complete before the
-    v2 dirs are removed; `_log/` stays authoritative until it is
-    gone."""
-    import json as _json
-    import shutil
-
-    from .datasource import (BLOOMS_DIR_NAME, BLOOMS_NAME,
-                             MANIFEST_DIR_NAME, dataset_commit_lock,
-                             is_sharded_log, log_dir, snapshots_path)
-
-    with dataset_commit_lock(path):
-        if not is_sharded_log(path):
-            return {"migrated": False, "reason": "already legacy"}
-        snaps = load_snapshots(path)  # materialized, self-contained
-        manifest = load_manifest(path)
-        blooms = load_blooms(path)
-        for name, obj in ((MANIFEST_NAME, manifest),
-                          (BLOOMS_NAME, blooms)):
-            if obj:
-                tmp = os.path.join(path, name + ".tmp-"
-                                   + uuid.uuid4().hex[:8])
-                with open(tmp, "w") as f:
-                    _json.dump(obj, f)
-                os.rename(tmp, os.path.join(path, name))
-        tmp = snapshots_path(path) + ".tmp-" + uuid.uuid4().hex[:8]
-        with open(tmp, "w") as f:
-            _json.dump(snaps, f)
-        os.rename(tmp, snapshots_path(path))
-        shutil.rmtree(log_dir(path), ignore_errors=True)
-        for dirname in (MANIFEST_DIR_NAME, BLOOMS_DIR_NAME):
-            shutil.rmtree(os.path.join(path, dirname), ignore_errors=True)
-        # stale v1-era markers (from before a sharded overwrite, or
-        # any dead lineage) would block the revived v1 lineage's low
-        # versions — a v2 dataset has no legitimate markers to keep
-        shutil.rmtree(os.path.join(path, "_commits"), ignore_errors=True)
-        from .datasource import _invalidate_log_cache
-
-        _invalidate_log_cache(path)
-        return {"migrated": True, "snapshots": len(snaps),
-                "head": snaps[-1]["version"]}
 
 
 def _bootstrap_log(path: str) -> tuple[int, list[str], int | None]:
@@ -1622,11 +1505,10 @@ def vacuum(path: str, keep_last: int = 1,
         return sorted(deleted)
     if deleted:
         _drop_manifest_entries(path, deleted)
-        from .datasource import (BLOOMS_DIR_NAME, BLOOMS_NAME,
-                                 _drop_sidecar_keys)
+        from .datasource import BLOOMS_DIR_NAME, _drop_sidecar_keys
 
-        _drop_sidecar_keys(path, BLOOMS_NAME, BLOOMS_DIR_NAME, deleted)
-    from .datasource import COMMIT_MARKERS_DIR, dataset_commit_lock
+        _drop_sidecar_keys(path, BLOOMS_DIR_NAME, deleted)
+    from .datasource import dataset_commit_lock
     from .format import ColfFormatError
 
     with dataset_commit_lock(path):
@@ -1641,16 +1523,6 @@ def vacuum(path: str, keep_last: int = 1,
                 f"against version {snaps[-1]['version']} but the log is "
                 f"at {head_now}. Retry the vacuum.")
         write_snapshots(path, kept)
-        # sweep dead commit markers: every version <= head is in the
-        # log (or pruned); only a claim for head+1 can be in flight
-        mdir = os.path.join(path, COMMIT_MARKERS_DIR)
-        if os.path.isdir(mdir):
-            for m in os.listdir(mdir):
-                try:
-                    if int(m.lstrip("v")) <= head_now:
-                        os.remove(os.path.join(mdir, m))
-                except ValueError:
-                    continue
     return sorted(deleted)
 
 
@@ -1670,9 +1542,11 @@ def remove_orphan_files(path: str, older_than_s: float = 3 * 86400.0,
     eligible, so an in-flight writer's not-yet-committed output is
     never swept. ``dry_run=True`` reports without deleting.
 
-    Also reclaims this engine's own crash artifacts: sibling
-    ``{path}.compact-*`` / ``{path}.rdel-*`` scratch dirs and stray
-    ``_manifest.json.tmp-*`` rename leftovers past the grace period.
+    Also reclaims this engine's own crash artifacts past the grace
+    period: sibling ``{path}.compact-*`` / ``{path}.rdel-*`` scratch
+    dirs, stray ``_refs.json.tmp-*`` / ``_constraints.json.tmp-*``
+    rename leftovers, and ``.tmp-`` files inside ``_log/``,
+    ``_manifests/`` and ``_blooms/``.
 
     Returns the deleted basenames (scratch dirs by their dir name).
     Datasets without a metadata log have directory-listing semantics —
@@ -1682,21 +1556,16 @@ def remove_orphan_files(path: str, older_than_s: float = 3 * 86400.0,
     snaps = load_snapshots(path)
     if not snaps:
         return []
-    from .datasource import DELETE_SUFFIX, dataset_commit_lock
+    from .datasource import DELETE_SUFFIX
 
     cutoff = _time.time() - older_than_s
     referenced = {b for s in snaps for b in s["files"]}
     referenced |= {d for s in snaps for d in s.get("deletes", [])}
-    # crash leftovers from every atomic-rename metadata writer, not
-    # just the manifest's (round-10 advice): blooms, refs,
-    # constraints, and the v1 log file itself
-    from .datasource import (BLOOMS_DIR_NAME, BLOOMS_NAME,
-                             CONSTRAINTS_NAME, LOG_DIR_NAME,
-                             MANIFEST_DIR_NAME, REFS_NAME,
-                             SNAPSHOTS_NAME)
-    meta_tmp_prefixes = tuple(
-        n + ".tmp" for n in (MANIFEST_NAME, BLOOMS_NAME, REFS_NAME,
-                             CONSTRAINTS_NAME, SNAPSHOTS_NAME))
+    # crash leftovers of the dataset-root atomic-rename metadata
+    # writers: refs and constraints
+    from .datasource import (BLOOMS_DIR_NAME, CONSTRAINTS_NAME,
+                             LOG_DIR_NAME, MANIFEST_DIR_NAME, REFS_NAME)
+    meta_tmp_prefixes = (REFS_NAME + ".tmp", CONSTRAINTS_NAME + ".tmp")
     removed = []
     for f in os.listdir(path):
         is_meta_tmp = f.startswith(meta_tmp_prefixes)
@@ -1709,12 +1578,9 @@ def remove_orphan_files(path: str, older_than_s: float = 3 * 86400.0,
             removed.append(f)
             if not dry_run:
                 os.remove(fp)
-    # crash leftovers INSIDE the sharded metadata dirs: checkpoint /
-    # shard tmp files (".tmp-" anywhere in the name marks a write that
-    # never reached its rename), and migrate_log's staged `_log.tmp-*`
-    # adoption dirs in the dataset root
-    import shutil as _shutil
-
+    # crash leftovers INSIDE the metadata dirs: log-entry /
+    # checkpoint / shard tmp files (".tmp-" anywhere in the name marks
+    # a write that never reached its rename)
     for sub in (LOG_DIR_NAME, MANIFEST_DIR_NAME, BLOOMS_DIR_NAME):
         sd = os.path.join(path, sub)
         if not os.path.isdir(sd):
@@ -1727,14 +1593,6 @@ def remove_orphan_files(path: str, older_than_s: float = 3 * 86400.0,
                 removed.append(f"{sub}/{f}")
                 if not dry_run:
                     os.remove(fp)
-    for d in os.listdir(path):
-        if not d.startswith(LOG_DIR_NAME + ".tmp-"):
-            continue
-        dp = os.path.join(path, d)
-        if os.path.isdir(dp) and os.path.getmtime(dp) < cutoff:
-            removed.append(d)
-            if not dry_run:
-                _shutil.rmtree(dp, ignore_errors=True)
     # abandoned whole-dataset rewrite scratch dirs live as SIBLINGS of
     # the dataset dir (compact()/rewrite_delete_files write there and
     # swap in; a crash strands the dir)
@@ -1757,12 +1615,10 @@ def remove_orphan_files(path: str, older_than_s: float = 3 * 86400.0,
         # orphans never committed, so they should have no manifest or
         # bloom entries — but a crash BETWEEN stats merge and log
         # commit can strand them; drop any to keep sidecars consistent
-        from .datasource import (BLOOMS_DIR_NAME, BLOOMS_NAME,
-                                 _drop_sidecar_keys)
+        from .datasource import _drop_sidecar_keys
 
         _drop_manifest_entries(path, swept_parts)
-        _drop_sidecar_keys(path, BLOOMS_NAME, BLOOMS_DIR_NAME,
-                           swept_parts)
+        _drop_sidecar_keys(path, BLOOMS_DIR_NAME, swept_parts)
     return sorted(removed)
 
 
@@ -1923,7 +1779,7 @@ def metadata_table(spark: SparkSession, path: str, kind: str):
       n_files, n_delete_files, staged, branch, data_change)``; staged
       WAP commits and branch commits appear flagged, exactly as the
       CLI ``snapshots`` command annotates them. SUMMARY-ONLY by
-      construction (round-12): counts fold along the v2 delta chains
+      construction (round-12): counts fold along the log's delta chains
       (snapshot_summaries), so the table is O(commits) driver-side
       even at 10^5 files x 10^4 commits — full file lists for a
       specific version come from materialize_log_versions on demand.
@@ -1965,8 +1821,8 @@ def metadata_table(spark: SparkSession, path: str, kind: str):
             StructField("first_version", IntegerType(), True),
         ]))
     if kind == "snapshots":
-        # summary fold — O(commits) even on a v2 log, never the
-        # O(commits x files) full-history materialization
+        # summary fold — O(commits), never the O(commits x files)
+        # full-history materialization
         rows = [(int(s["version"]), s["ts"], int(s["n_files"]),
                  int(s["n_delete_files"]), s["staged"], s["branch"],
                  s["data_change"])

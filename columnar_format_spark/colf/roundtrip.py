@@ -137,7 +137,7 @@ def q73_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_lineitem_colf(spark: SparkSession, sf_dir: str) -> str:
     """lineitem (5 columns, int32-keyed) written once per session as a
     RANGE-PARTITIONED COLF dataset: repartitionByRange(l_orderkey) gives
-    each part file a disjoint key range, so the _manifest.json zone maps
+    each part file a disjoint key range, so the _manifests/ zone maps
     can prune files for key predicates."""
     def write(d: str) -> None:
         from .datasource import register as register_ds
@@ -195,7 +195,7 @@ def q75_colf_selective_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q76_colf_zonemap_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map file skipping under the correctness gate: a key-range
     predicate over the range-partitioned COLF dataset reaches
-    ColfReader.pushFilters, which consults the _manifest.json min/max
+    ColfReader.pushFilters, which consults the _manifests/ min/max
     stats and opens only the file(s) whose range can match (1-2 of 8);
     Spark re-applies the filter row-level, so pruning can only save
     I/O, never change the result — which is exactly what the oracle
@@ -1062,7 +1062,7 @@ def q164_colf_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ``option("bloomColumns", "o_orderkey")`` — the layout where
     every file's zone map spans ~the whole key range, so min/max
     pruning opens all files and the per-file Bloom sidecar
-    (_blooms.json, bloom.py) is the only signal that can skip I/O. The
+    (_blooms/, bloom.py) is the only signal that can skip I/O. The
     query probes one known key and ASSERTS, from the reader's own
     partition planning, that (a) the bloom pass opened at most half
     the files (expected: 1 true + ~1% fp of the rest) and (b) zone
@@ -1117,7 +1117,7 @@ def q164_colf_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if with_bloom > bound:
         raise AssertionError(
             f"bloom point lookup opened {with_bloom}/{n_files} files "
-            f"(fpp-derived bound {bound}) — the _blooms.json sidecar is "
+            f"(fpp-derived bound {bound}) — the _blooms/ sidecar is "
             f"not pruning a hash layout")
     return (df.filter(F.col("o_orderkey") == probe)
             .select(F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
@@ -1144,7 +1144,7 @@ def q167_colf_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on a Bloom-indexed id over a HASH-scattered dataset (the
     layout where zone maps cover every file). The delete's pass-1
     discovery scan pushes `o_orderkey = <victim>` through pushFilters,
-    so the _blooms.json sidecar prunes the candidate set to the one
+    so the _blooms/ sidecar prunes the candidate set to the one
     file that can hold the key — asserted via the op's own
     n_rewritten_files (≤2 of 8: the true file plus at most one false
     positive) — and the rewrite touches only those bytes. The oracle
@@ -1313,7 +1313,7 @@ def q171_colf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q172_metadata_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only table profile: COUNT(*)/null_count/MIN/MAX per
-    column folded entirely from the ``_manifest.json`` zone-map sidecar
+    column folded entirely from the ``_manifests/`` zone-map sidecar
     — ZERO data-file I/O, the Delta/Iceberg "answer SELECT COUNT(*)
     from file statistics" fast path. The query reuses q164's staged
     orders dataset (same stage_once key), raises if any live file
@@ -3312,7 +3312,6 @@ def q206_colf_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from .datasource import register as register_ds
-    from .datasource import snapshots_path
     from .maintenance import (delete_where, remove_orphan_files,
                               visible_count)
 
@@ -3353,7 +3352,8 @@ def q206_colf_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(os.path.join(scratch, "junk.colf"), "wb") as fh:
         fh.write(b"junk")
     os.utime(scratch, (old_t, old_t))
-    mtmp = "_manifest.json.tmp-dead0"
+    # a manifest shard write that never reached its rename
+    mtmp = "_manifests/.tmp-dead0"
     with open(os.path.join(path, mtmp), "w") as fh:
         fh.write("{}")
     os.utime(os.path.join(path, mtmp), (old_t, old_t))
@@ -3893,129 +3893,6 @@ def q212_colf_cdf_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     _assert_bag_equal(replayed, head,
                       "CDF replay does not reconstruct the head state")
     return replayed.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("o_orderkey").cast("bigint")).alias("key_sum"))
-
-
-@register(
-    "q213_colf_metadata_migration",
-    oracle="""
-    WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-    s1 AS (  -- v2 (LEGACY-era append): shifted 'P' rows
-      SELECT o_orderkey, o_orderstatus FROM orders
-      UNION ALL
-      SELECT o_orderkey + mx.m + 1, 'P' FROM orders, mx
-      WHERE o_orderkey % 30 = 2),
-    s2 AS (  -- v3 (LEGACY-era MoR delete): %7==0 'F' rows out
-      SELECT o_orderkey, o_orderstatus FROM s1
-      WHERE NOT (o_orderkey % 7 = 0 AND o_orderstatus = 'F')),
-    s3 AS (  -- v4 (POST-MIGRATION MoR update): %60==5 -> 'M'
-      SELECT o_orderkey,
-             CASE WHEN o_orderkey % 60 = 5 THEN 'M'
-                  ELSE o_orderstatus END AS o_orderstatus
-      FROM s2)
-    SELECT o_orderstatus,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-    FROM s3 GROUP BY o_orderstatus
-    """,
-)
-def q213_colf_metadata_migration(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """METADATA-LOG MIGRATION (round-10 verdict item #1's proof): the
-    v1 monolithic metadata (`_snapshots.json` rewritten whole per
-    commit — O(table) metadata bytes per commit) migrates in place to
-    the SHARDED v2 layout (`_log/` per-commit delta entries +
-    checkpoints, `_manifests/`/`_blooms/` immutable shards — commit
-    cost O(commit), the Iceberg manifest-list / Delta checkpointed-
-    delta-log model; maintenance.migrate_log) with the logical history
-    IDENTICAL across the boundary. The query builds a v1-era dataset
-    (maintenance.to_legacy_log), runs legacy-era DML (append + MoR
-    delete), migrates, runs post-migration DML (MoR update), and
-    asserts IN-QUERY: (1) the materialized history is bit-identical
-    before/after migration, (2) time travel to a legacy-era version
-    still reads, (3) a full CDF replay from version 0 — spanning the
-    migration — reconstructs the head exactly, (4) the post-migration
-    commit wrote exactly ONE new log entry file (no whole-log
-    rewrite). The oracle recomputes the final state relationally.
-
-    Scale: this is the operator that takes commits from O(table) to
-    O(commit) metadata writes — at 10^5-10^6 files the v1 log is a
-    ~100 MB driver-side JSON serialize per commit; v2 writes a few
-    hundred bytes (pinned by tests/test_colf_metadata_shard.py's
-    10k-file criterion). Migration itself is one O(history) pass,
-    staged in a tmp dir and adopted by a single atomic rename."""
-    import os
-
-    from .datasource import cdf_replay, is_sharded_log, load_snapshots
-    from .datasource import register as register_ds
-    from .datasource import _parse_log_name, log_dir
-    from .maintenance import (delete_where, migrate_log, to_legacy_log,
-                              update_where)
-
-    register_ds(spark)
-
-    def build(d: str) -> None:
-        # the migration INPUT — a v1-era dataset with legacy-era DML —
-        # staged once per process; the operators under test
-        # (migrate_log, the identical-history/time-travel/replay
-        # proofs, the O(commit) post-migration DML) run per invocation
-        # on a fresh clone
-        base = _stage_cdc_orders(spark, sf_dir)
-        clone_dataset(base + "/ds", d + "/ds")
-        mx = _CDC_MAXKEY[sf_dir]
-        to_legacy_log(d + "/ds")  # become a v1-era dataset
-        (table(spark, sf_dir, "orders")
-         .filter(F.col("o_orderkey") % 30 == 2)
-         .select((F.col("o_orderkey") + mx + 1).cast("int")
-                 .alias("o_orderkey"),
-                 F.lit("P").alias("o_orderstatus"))
-         .coalesce(1).write.format("colf").mode("append")
-         .save(d + "/ds"))
-        delete_where(spark, d + "/ds",
-                     "o_orderkey % 7 = 0 AND o_orderstatus = 'F'",
-                     mode="mor")
-
-    tmpl = stage_once(("colf-metadata-migration-tmpl", sf_dir),
-                      "colf_migrate_tmpl_", build)
-    path = run_dir(("colf-metadata-migration-run", sf_dir),
-                   "colf_migrate_") + "/ds"
-    clone_dataset(tmpl + "/ds", path)
-    if is_sharded_log(path):
-        raise AssertionError("legacy-era template lost its v1 log")
-
-    hist_before = load_snapshots(path)
-    res = migrate_log(path)
-    if not (res["migrated"] and is_sharded_log(path)):
-        raise AssertionError(f"migration did not shard the log: {res}")
-    if load_snapshots(path) != hist_before:
-        raise AssertionError("migration changed the logical history")
-
-    def n_log_entries() -> int:
-        return sum(1 for n in os.listdir(log_dir(path))
-                   for p in (_parse_log_name(n),) if p and not p[1])
-
-    n0 = n_log_entries()
-    update_where(spark, path, {"o_orderstatus": "'M'"},
-                 "o_orderkey % 60 = 5", mode="mor")
-    if n_log_entries() != n0 + 1:
-        raise AssertionError(
-            "post-migration commit did not write exactly one log entry")
-
-    # legacy-era version still time-travels (v1 = the template write)
-    v1 = spark.read.format("colf").option("snapshot", "1").load(path)
-    if v1.count() != table(spark, sf_dir, "orders").count():
-        raise AssertionError("legacy-era snapshot unreadable or wrong")
-
-    # CDC replay across the migration boundary reconstructs the head
-    # single tagged-union pass (_assert_bag_equal): the replay
-    # subtree is evaluated ONCE instead of once per exceptAll side
-    replayed = cdf_replay(spark, path)
-    head = spark.read.format("colf").load(path)
-    _assert_bag_equal(
-        replayed, head,
-        "CDF replay across the migration does not match the head")
-    return head.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum(F.col("o_orderkey").cast("bigint")).alias("key_sum"))
 

@@ -1,4 +1,4 @@
-"""Per-file Bloom filters (_blooms.json sidecar): point-lookup pruning
+"""Per-file Bloom filters (_blooms/ sidecar): point-lookup pruning
 on high-cardinality UNCLUSTERED keys, where zone maps cannot help —
 every file's [min, max] covers an arrival-ordered key, so min/max
 pruning opens everything and the bloom is what says "not in this
@@ -456,7 +456,7 @@ def test_v3_cow_preserves_stripe_blooms(spark, tmp_path):
 
 
 def test_corrupt_bloom_sidecar_degrades_to_no_pruning(spark, tmp_path):
-    """A corrupt/garbage _blooms.json must never fail a read or change
+    """A corrupt/garbage _blooms/ shard must never fail a read or change
     results — blooms can only SKIP I/O, so the degradation is to scan
     every zone-map-surviving file (same contract as a corrupt
     manifest)."""

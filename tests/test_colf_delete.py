@@ -394,8 +394,9 @@ def test_clone_dataset_hardlinks_isolate_mutations(spark, tmp_path):
      .repartition(4).write.format("colf").mode("overwrite").save(tmpl))
 
     def digest(d):
-        # walk INTO subdirs (_commits markers) rather than skip them:
-        # a clone mutation leaking a marker into the template must fail
+        # walk INTO subdirs (_log/, _manifests/) rather than skip
+        # them: a clone mutation leaking a log entry or sidecar shard
+        # into the template must fail
         out = {}
         for root, _dirs, files in sorted(os.walk(d)):
             for f in sorted(files):

@@ -151,8 +151,8 @@ def test_failed_cas_invalidates_raw_log_cache(tmp_path):
 
 def test_read_log_raw_tolerates_vanished_dir(tmp_path, monkeypatch):
     """Round-12 advice (low): the _log dir vanishing between the
-    isdir check and the listdir (racing to_legacy_log / overwrite
-    reset) is the defined empty state, not a crash."""
+    isdir check and the listdir (a racing overwrite reset) is the
+    defined empty state, not a crash."""
     from columnar_format_spark.colf.datasource import _read_log_raw
 
     missing = str(tmp_path / "ds-that-never-existed")

@@ -2,7 +2,7 @@
 (`_log/` per-commit delta entries + derived checkpoints) and the
 sharded manifest/bloom sidecars must make every commit's metadata
 write O(that commit) — independent of table size — while reproducing
-the exact logical history the monolithic v1 format recorded.
+the exact logical history of whole self-contained snapshots.
 
 The headline test here IS the verdict's done-criterion: a dataset
 with 10,000 live files whose next commit writes the same metadata
@@ -13,7 +13,6 @@ runs on the sharded default."""
 
 import json
 import os
-import shutil
 
 import pytest
 
@@ -21,13 +20,11 @@ from columnar_format_spark.colf.datasource import (
     BLOOMS_DIR_NAME,
     LOG_CHECKPOINT_EVERY,
     MANIFEST_DIR_NAME,
-    MANIFEST_NAME,
     _append_sidecar_shard,
     _drop_sidecar_keys,
     _load_sharded_dict,
     _parse_log_name,
     commit_snapshot,
-    is_sharded_log,
     load_manifest,
     load_snapshots,
     log_dir,
@@ -146,12 +143,32 @@ def test_checkpoint_written_and_purely_derived(tmp_path):
     assert load_snapshots(p) == before
 
 
+def test_only_current_encodings_are_log_members(tmp_path):
+    """Log members are `v<N>.json` commit entries and `v<N>.ckpt.jz`
+    checkpoints. A plain-JSON `.ckpt.json` checkpoint (an early
+    encoding) is not a member: checkpoints are derived, so a leftover
+    one is simply ignored, whatever it holds."""
+    assert _parse_log_name("v000000000020.json") == (20, False)
+    assert _parse_log_name("v000000000020.ckpt.jz") == (20, True)
+    assert _parse_log_name("v000000000020.ckpt.json") is None
+    assert _parse_log_name("v000000000020.jz") is None
+    p = str(tmp_path / "ds")
+    _bootstrap(p, 3)
+    before = load_snapshots(p)
+    with open(os.path.join(log_dir(p), "v000000000001.ckpt.json"),
+              "w") as f:
+        json.dump({"version": 1, "files": ["stale.colf"]}, f)
+    from columnar_format_spark.colf.datasource import _LOG_RAW_CACHE
+
+    _LOG_RAW_CACHE.clear()
+    assert load_snapshots(p) == before
+
+
 def test_concurrent_version_claim_is_the_entry_file(tmp_path):
     """Two writers claiming the same version: the O_EXCL entry-file
     create arbitrates — exactly one wins, the loser gets the
-    documented retryable error (no _commits marker dir needed)."""
-    from columnar_format_spark.colf.datasource import (
-        COMMIT_MARKERS_DIR, _append_sharded_entry)
+    documented retryable error."""
+    from columnar_format_spark.colf.datasource import _append_sharded_entry
 
     p = str(tmp_path / "ds")
     live = _bootstrap(p, 3)
@@ -160,8 +177,6 @@ def test_concurrent_version_claim_is_the_entry_file(tmp_path):
     _append_sharded_entry(p, base, entry, reset=False)
     with pytest.raises(ColfFormatError, match="concurrent commit"):
         _append_sharded_entry(p, base, dict(entry, ts=2.0), reset=False)
-    # sharded datasets never create the v1 marker dir
-    assert not os.path.isdir(os.path.join(p, COMMIT_MARKERS_DIR))
 
 
 def test_write_snapshots_prune_keeps_log_readable(tmp_path):
@@ -202,19 +217,15 @@ def test_write_snapshots_prune_keeps_log_readable(tmp_path):
 def test_sharded_sidecar_append_drop_compact(tmp_path):
     """Manifest shards: appends are new immutable files, drops rewrite
     only affected shards, and passing the shard cap folds everything
-    (legacy file included) into one."""
+    into one."""
     p = str(tmp_path / "ds")
     os.makedirs(p)
-    # a legacy monolithic manifest already present
-    with open(os.path.join(p, MANIFEST_NAME), "w") as f:
-        json.dump({"legacy.colf": {"num_rows": 1}}, f)
     for i in range(3):
         _append_sidecar_shard(p, MANIFEST_DIR_NAME,
                               {f"f{i}.colf": {"num_rows": i}})
     man = load_manifest(p)
-    assert set(man) == {"legacy.colf", "f0.colf", "f1.colf", "f2.colf"}
-    _drop_sidecar_keys(p, MANIFEST_NAME, MANIFEST_DIR_NAME,
-                       ["f1.colf", "legacy.colf"])
+    assert set(man) == {"f0.colf", "f1.colf", "f2.colf"}
+    _drop_sidecar_keys(p, MANIFEST_DIR_NAME, ["f1.colf"])
     assert set(load_manifest(p)) == {"f0.colf", "f2.colf"}
     # force a compaction by exceeding the cap
     from columnar_format_spark.colf import datasource as D
@@ -226,21 +237,7 @@ def test_sharded_sidecar_append_drop_compact(tmp_path):
               if n.startswith("s-")]
     # folded once the cap tripped; the post-fold appends add a few
     assert len(shards) <= 3
-    assert not os.path.exists(os.path.join(p, MANIFEST_NAME))
     assert len(load_manifest(p)) == D.SIDECAR_COMPACT_SHARDS + 1 + 2
-
-
-def test_stale_v1_log_beside_v2_is_ignored(tmp_path):
-    """A crash between migration's _log adoption and the v1 file
-    removal leaves both; `_log/` must win."""
-    p = str(tmp_path / "ds")
-    live = _bootstrap(p, 3)
-    commit_snapshot(p, live + ["extra.colf"], expected_parent=1)
-    with open(os.path.join(p, "_snapshots.json"), "w") as f:
-        json.dump([{"version": 99, "files": ["bogus.colf"]}], f)
-    assert is_sharded_log(p)
-    assert [s["version"] for s in load_snapshots(p)] == [1, 2]
-    assert "bogus.colf" not in load_snapshots(p)[-1]["files"]
 
 
 def test_log_fingerprint_tracks_commits_only(tmp_path):
@@ -252,37 +249,10 @@ def test_log_fingerprint_tracks_commits_only(tmp_path):
     assert log_fingerprint(p) != f0
 
 
-def test_migrate_and_back_preserve_history(tmp_path):
-    """migrate_log / to_legacy_log round-trip the materialized history
-    bit-for-bit, including branch/staged lineage structure."""
-    from columnar_format_spark.colf.maintenance import (migrate_log,
-                                                        to_legacy_log)
-
-    p = str(tmp_path / "ds")
-    os.makedirs(p)
-    live = _fake_files(4)
-    v = commit_snapshot(p, live)
-    v = commit_snapshot(p, live + ["a2.colf"], expected_parent=v)
-    commit_snapshot(p, live + ["w1.colf"], expected_parent=v,
-                    staged=True, added=["w1.colf"])
-    commit_snapshot(p, live + ["b1.colf"], expected_parent=3,
-                    branch="dev", added=["b1.colf"])
-    sharded_hist = load_snapshots(p)
-    r = to_legacy_log(p)
-    assert r["migrated"] and not is_sharded_log(p)
-    assert load_snapshots(p) == sharded_hist
-    r = migrate_log(p)
-    assert r["migrated"] and is_sharded_log(p)
-    assert load_snapshots(p) == sharded_hist
-    assert migrate_log(p) == {"migrated": False,
-                              "reason": "already sharded"}
-
-
 def test_bloom_sidecar_sharding_roundtrip(tmp_path):
     p = str(tmp_path / "ds")
     os.makedirs(p)
-    from columnar_format_spark.colf.datasource import (BLOOMS_NAME,
-                                                       load_blooms,
+    from columnar_format_spark.colf.datasource import (load_blooms,
                                                        save_blooms)
 
     _append_sidecar_shard(p, BLOOMS_DIR_NAME,
@@ -292,16 +262,13 @@ def test_bloom_sidecar_sharding_roundtrip(tmp_path):
     assert set(load_blooms(p)) == {"a.colf", "b.colf"}
     save_blooms(p, {"c.colf": {"columns": {}}})  # full replace
     assert set(load_blooms(p)) == {"c.colf"}
-    assert _load_sharded_dict(p, BLOOMS_NAME, BLOOMS_DIR_NAME) == \
-        load_blooms(p)
+    assert _load_sharded_dict(p, BLOOMS_DIR_NAME) == load_blooms(p)
 
 
 def test_raw_log_cache_invalidates_on_every_mutation(tmp_path):
     """The process-level raw-log cache must never serve a stale log:
-    commits, vacuum rewrites, and migrations all mutate the _log dir
+    commits and vacuum rewrites both mutate the _log dir
     (create/rename/remove bump its mtime)."""
-    from columnar_format_spark.colf.maintenance import to_legacy_log
-
     p = str(tmp_path / "ds")
     live = _bootstrap(p, 3)
     assert [s["version"] for s in load_snapshots(p)] == [1]
@@ -319,8 +286,6 @@ def test_raw_log_cache_invalidates_on_every_mutation(tmp_path):
     fresh = load_snapshots(p)
     assert fresh[-1]["version"] == 3
     assert "poison.colf" not in fresh[-1]["files"]
-    to_legacy_log(p)
-    assert [s["version"] for s in load_snapshots(p)] == [2, 3]
 
 
 def test_checkpoint_resolves_eq_inherit(tmp_path):
@@ -362,31 +327,10 @@ def test_log_cache_survives_same_tick_writes(tmp_path):
     assert [s["version"] for s in load_snapshots(p)] == [1, 2]
 
 
-def test_overwrite_reset_sweeps_stale_v1_markers(tmp_path):
-    """A sharded reset (overwrite) must clear a legacy lineage's
-    _commits markers: they would otherwise outlive the overwrite and
-    block a later to_legacy_log lineage's low versions."""
-    from columnar_format_spark.colf.datasource import COMMIT_MARKERS_DIR
-    from columnar_format_spark.colf.maintenance import to_legacy_log
-
-    p = str(tmp_path / "ds")
-    os.makedirs(os.path.join(p, COMMIT_MARKERS_DIR))
-    for v in range(1, 6):
-        open(os.path.join(p, COMMIT_MARKERS_DIR, f"v{v:012d}"), "w").close()
-    commit_snapshot(p, _fake_files(2), reset=True)
-    assert not os.path.isdir(os.path.join(p, COMMIT_MARKERS_DIR))
-    # and to_legacy_log leaves a marker-free v1 dataset whose low
-    # versions commit cleanly
-    commit_snapshot(p, _fake_files(3), expected_parent=1)
-    to_legacy_log(p)
-    v = commit_snapshot(p, _fake_files(4), expected_parent=2)
-    assert v == 3
-
-
 def test_orphan_sweep_covers_metadata_dir_tmps(tmp_path):
-    """Crash-leftover tmp files inside _log/_manifests/_blooms and a
-    stranded migrate_log staging dir are swept past the grace period;
-    recent ones and committed members survive."""
+    """Crash-leftover tmp files inside _log/_manifests/_blooms are
+    swept past the grace period; recent ones and committed members
+    survive."""
     import time
 
     from columnar_format_spark.colf.datasource import (BLOOMS_DIR_NAME,
@@ -404,43 +348,14 @@ def test_orphan_sweep_covers_metadata_dir_tmps(tmp_path):
         open(fp, "w").close()
         os.utime(fp, (old, old))
         victims.append(f"{sub}/{os.path.basename(fp)}")
-    staged = os.path.join(p, "_log.tmp-deadmig")
-    os.makedirs(staged)
-    os.utime(staged, (old, old))
     recent = os.path.join(p, "_log", "y.tmp-fresh")
     open(recent, "w").close()
 
     got = remove_orphan_files(p, older_than_s=3600)
-    assert set(victims) <= set(got) and "_log.tmp-deadmig" in got
-    assert not os.path.isdir(staged)
+    assert set(victims) <= set(got)
     assert os.path.exists(recent)  # grace period
     assert load_snapshots(p)  # log intact
     assert load_manifest(p).get("a.colf")  # committed shard intact
-
-
-def test_migrate_log_with_full_sidecar_shards_does_not_deadlock(tmp_path):
-    """migrate_log appends the folded legacy sidecar while HOLDING the
-    dataset commit lock; at the shard-compaction threshold the
-    opportunistic fold used to re-acquire the non-reentrant lock."""
-    import json as _json
-
-    from columnar_format_spark.colf import datasource as D
-    from columnar_format_spark.colf.maintenance import (migrate_log,
-                                                        to_legacy_log)
-
-    p = str(tmp_path / "ds")
-    _bootstrap(p, 2)
-    to_legacy_log(p)
-    # legacy manifest file + a full complement of shards
-    with open(os.path.join(p, MANIFEST_NAME), "w") as f:
-        _json.dump({"legacy.colf": {"num_rows": 1}}, f)
-    for i in range(D.SIDECAR_COMPACT_SHARDS):
-        _append_sidecar_shard(p, MANIFEST_DIR_NAME,
-                              {f"s{i}.colf": {"num_rows": i}},
-                              compact=False)
-    r = migrate_log(p)  # used to hang here
-    assert r["migrated"]
-    assert len(load_manifest(p)) == D.SIDECAR_COMPACT_SHARDS + 1
 
 
 def test_reused_column_name_resolves_conservatively():

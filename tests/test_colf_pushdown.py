@@ -1,4 +1,4 @@
-"""Zone-map file skipping: the writer's _manifest.json sidecar + the
+"""Zone-map file skipping: the writer's _manifests/ sidecar + the
 reader's pushFilters let a filtered scan open only the files whose
 min/max ranges can match (the COLF format itself has no row groups or
 stats — SPEC has offsets+sizes only — so pruning lives beside it)."""
@@ -18,7 +18,6 @@ from pyspark.sql.datasource import (
 
 from columnar_format_spark.colf.datasource import (
     ColfReader,
-    MANIFEST_NAME,
     load_manifest,
     register,
 )
@@ -159,8 +158,7 @@ def test_files_without_manifest_entry_survive(ranged_dataset):
     m = load_manifest(ranged_dataset)
     victim = sorted(m)[0]
     stats = m[victim]
-    _drop_sidecar_keys(ranged_dataset, MANIFEST_NAME, MANIFEST_DIR_NAME,
-                       [victim])
+    _drop_sidecar_keys(ranged_dataset, MANIFEST_DIR_NAME, [victim])
     try:
         parts = _reader(ranged_dataset,
                         [EqualTo(("o_orderkey",), -999999)]).partitions()

@@ -4,8 +4,7 @@ manifest/bloom union must not be re-parsed from every `_manifests/` /
 verdict's done-criterion: a WARM plan against an UNCHANGED 10^5-entry
 dataset parses ZERO shard files; a commit-loop append refreshes the
 cache IN PLACE (still zero re-parses of existing shards); and every
-mutation path — drop, compaction, external writer, legacy rewrite,
-reset — changes the stat key and is picked up.
+mutation path — drop, compaction, external writer, reset — changes the stat key and is picked up.
 
 Also pins the LRU-by-write eviction fix (round-12 verdict nit #2) for
 all three process caches: a hot, frequently-UPDATED dataset must never
@@ -25,7 +24,6 @@ from columnar_format_spark.colf.datasource import (
     _LOG_RAW_CACHE,
     _SIDECAR_CACHE,
     MANIFEST_DIR_NAME,
-    MANIFEST_NAME,
     _append_sidecar_shard,
     _drop_sidecar_keys,
     commit_snapshot,
@@ -106,8 +104,7 @@ def test_drop_is_picked_up(big_manifest):
     dropped key must be gone."""
     p = big_manifest
     load_manifest(p)  # warm
-    _drop_sidecar_keys(p, MANIFEST_NAME, MANIFEST_DIR_NAME,
-                       ["part-000001.colf"])
+    _drop_sidecar_keys(p, MANIFEST_DIR_NAME, ["part-000001.colf"])
     man = load_manifest(p)
     assert "part-000001.colf" not in man
     assert "part-000002.colf" in man
@@ -125,22 +122,6 @@ def test_external_shard_write_is_picked_up(big_manifest):
         json.dump({"part-ext-00.colf": {"num_rows": 3, "columns": {}}}, f)
     os.rename(tmp, os.path.join(d, f"s-{uuid.uuid4().hex}.json"))
     assert load_manifest(p)["part-ext-00.colf"]["num_rows"] == 3
-
-
-def test_legacy_file_change_is_picked_up(tmp_path):
-    """The legacy monolithic `_manifest.json` participates in the stat
-    key: writing/rewriting it invalidates the cached union."""
-    p = str(tmp_path / "ds")
-    os.makedirs(p)
-    _append_sidecar_shard(p, MANIFEST_DIR_NAME,
-                          {"s.colf": {"num_rows": 1, "columns": {}}})
-    assert set(load_manifest(p)) == {"s.colf"}
-    lf = os.path.join(p, MANIFEST_NAME)
-    tmp = lf + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"legacy.colf": {"num_rows": 2, "columns": {}}}, f)
-    os.rename(tmp, lf)
-    assert set(load_manifest(p)) == {"s.colf", "legacy.colf"}
 
 
 def test_sidecar_cache_lru_by_write(tmp_path):

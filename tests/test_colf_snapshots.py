@@ -206,16 +206,44 @@ def test_corrupt_log_raises_not_listing_fallback(colf_spark, tmp_path):
         _read(colf_spark, path).collect()
 
 
-def test_corrupt_legacy_log_raises_too(tmp_path):
-    """The v1 monolithic-log read path keeps the same refusal."""
-    from columnar_format_spark.colf.datasource import snapshots_path
+def test_corrupt_legacy_log_raises_too(colf_spark, tmp_path):
+    """A logless dir holding the retired v1 log (`_snapshots.json`) is
+    refused on read and on write: the v1 log is no longer read, and
+    the directory listing is no stand-in for it."""
+    import json
+    import shutil
+
+    from columnar_format_spark.colf.datasource import log_dir
 
     path = str(tmp_path / "ds")
-    os.makedirs(path)
-    with open(snapshots_path(path), "w") as f:
-        f.write("{not json")
-    with pytest.raises(ColfFormatError, match="corrupt metadata log"):
+    _ints(colf_spark, 0, 20).repartition(2).write.format("colf") \
+        .mode("overwrite").save(path)
+    live = sorted(os.path.basename(f) for f in dataset_files(path))
+    shutil.rmtree(log_dir(path))
+    with open(os.path.join(path, "_snapshots.json"), "w") as f:
+        json.dump([{"version": 1, "files": live}], f)
+    with pytest.raises(ColfFormatError, match="no longer read"):
         load_snapshots(path)
+    with pytest.raises(Exception, match="no longer read"):
+        _read(colf_spark, path).collect()
+    with pytest.raises(Exception, match="no longer read"):
+        _ints(colf_spark, 20, 25).write.format("colf") \
+            .mode("append").save(path)
+    with pytest.raises(Exception, match="no longer read"):
+        _ints(colf_spark, 20, 25).write.format("colf") \
+            .mode("overwrite").save(path)
+    # the refused writes committed nothing and wrote no log
+    assert not os.path.isdir(log_dir(path))
+    # beside a _log/, a _snapshots.json is never read at all
+    path2 = str(tmp_path / "ds2")
+    _ints(colf_spark, 0, 3).coalesce(1).write.format("colf") \
+        .mode("overwrite").save(path2)
+    with open(os.path.join(path2, "_snapshots.json"), "w") as f:
+        f.write("{not json")
+    _ints(colf_spark, 3, 5).coalesce(1).write.format("colf") \
+        .mode("append").save(path2)
+    assert [s["version"] for s in load_snapshots(path2)] == [1, 2]
+    assert _vals(_read(colf_spark, path2)) == list(range(5))
 
 
 def test_concurrent_commit_cas_detects_lost_update(tmp_path):
@@ -364,7 +392,6 @@ def test_remove_orphan_files_contract(colf_spark, tmp_path):
     import shutil
     import time
 
-    from columnar_format_spark.colf.datasource import snapshots_path
     from columnar_format_spark.colf.maintenance import remove_orphan_files
 
     path = str(tmp_path / "ds")
@@ -426,7 +453,6 @@ def test_metadata_tables(colf_spark, tmp_path):
     """files/snapshots/refs metadata tables reflect the manifest and
     log exactly; manifest-less (reference-writer-style) files fall
     back to reading n_rows from the COLF header."""
-    from columnar_format_spark.colf.datasource import manifest_path
     from columnar_format_spark.colf.maintenance import (
         create_tag, metadata_table)
 
@@ -543,9 +569,6 @@ def test_timestamp_as_of(colf_spark, tmp_path):
     at or before the instant (epoch or ISO, UTC); before-the-first
     raises; mutually exclusive with snapshot/ref."""
     import datetime
-    import json
-
-    from columnar_format_spark.colf.datasource import snapshots_path
 
     path = str(tmp_path / "ds")
     _ints(colf_spark, 0, 10).coalesce(1).write.format("colf") \

@@ -1,54 +1,72 @@
 """Pins the INCREMENTAL streaming log fold (round-11 post-gate change,
-round-12 verdict item #2): `ColfStreamReader._log_entries` folds a v2
-sharded log's raw delta entries in one forward pass — O(commits +
-files) per latestOffset poll — relying on the invariant that a
-PUBLISHED delta entry's `base` is the previous published version by
-construction (staged/branch commits never become a published entry's
-base). These tests build every history shape that could break that
-invariant — appends, a staged WAP commit, a branch commit, a
-data_change=False compaction, a vacuum prune (self-contained rewrite),
-post-vacuum appends — and assert the incremental fold yields the
-byte-identical (version, new-files) expansion basis as the legacy
-full-materialization fold running on the v1 export of the SAME
-history (maintenance.to_legacy_log, proven bit-identical by q213).
+round-12 verdict item #2): `ColfStreamReader._log_entries` folds the
+log's raw delta entries in one forward pass — O(commits + files) per
+latestOffset poll — relying on the invariant that a PUBLISHED delta
+entry's `base` is the previous published version by construction
+(staged/branch commits never become a published entry's base). These
+tests build every history shape that could break that invariant —
+appends, a staged WAP commit, a branch commit, a data_change=False
+compaction, a vacuum prune (self-contained rewrite), post-vacuum
+appends — and assert the incremental fold yields the byte-identical
+(version, new-files) expansion basis as the reference fold over the
+FULLY MATERIALIZED history (`published_snapshots(load_snapshots(p))`).
 
 Log-layer unit tests — no Spark session."""
 
 import os
-import shutil
 
-import pytest
 from pyspark.sql.types import StructType
 
 from columnar_format_spark.colf.datasource import (
     ColfStreamReader,
     commit_snapshot,
-    is_sharded_log,
     load_snapshots,
+    published_snapshots,
     write_snapshots,
 )
-from columnar_format_spark.colf.maintenance import to_legacy_log
 
 
 def _entries(p):
     return ColfStreamReader({"path": p}, StructType([]))._log_entries()
 
 
-def _v1_clone(p, dst):
-    """The SAME logical history on the v1 monolithic log — the legacy
-    fold path (`published_snapshots(load_snapshots(...))`) is the
-    reference implementation the incremental fold must match."""
-    shutil.copytree(p, dst)
-    to_legacy_log(dst)
-    assert not is_sharded_log(dst)
-    return dst
+def _reference_entries(p):
+    """(version, sorted new basenames) per PUBLISHED snapshot, diffing
+    each materialized live set against the previous one — the
+    reference the incremental fold must match. A data_change=False
+    commit (a reorganizing rewrite) delivers nothing, except as the
+    first retained commit, which is the replay basis and delivers its
+    full set."""
+    out = []
+    prev: set[str] = set()
+    for s in published_snapshots(load_snapshots(p)):
+        cur = set(s["files"])
+        if s.get("data_change") is False and prev:
+            out.append((s["version"], []))
+        else:
+            out.append((s["version"], sorted(cur - prev)))
+        prev = cur
+    return out
 
 
-def _assert_folds_agree(p, tmp_path, tag):
-    v2 = _entries(p)
-    v1 = _entries(_v1_clone(p, str(tmp_path / f"legacy-{tag}")))
-    assert v2 == v1, f"{tag}: incremental fold diverged\n{v2}\nvs\n{v1}"
-    return v2
+def _reference_offset_files(p, off):
+    """The file set a cursor offset {"v", "k"} expands to over the
+    reference fold: every new file of earlier versions plus the first
+    k of version v."""
+    files: set[str] = set()
+    for ver, new in _reference_entries(p):
+        if ver < off["v"]:
+            files.update(new)
+        elif ver == off["v"]:
+            files.update(new[:off["k"]])
+    return files
+
+
+def _assert_folds_agree(p, tag):
+    inc = _entries(p)
+    ref = _reference_entries(p)
+    assert inc == ref, f"{tag}: incremental fold diverged\n{inc}\nvs\n{ref}"
+    return inc
 
 
 def _build_history(p):
@@ -72,7 +90,7 @@ def _build_history(p):
 def test_incremental_fold_matches_legacy_on_mixed_history(tmp_path):
     p = str(tmp_path / "ds")
     _build_history(p)
-    got = _assert_folds_agree(p, tmp_path, "mixed")
+    got = _assert_folds_agree(p, "mixed")
     # and both match the hand-derived expansion basis: staged/branch
     # excluded, the compaction's reorganized files NOT re-delivered
     assert got == [
@@ -95,7 +113,7 @@ def test_incremental_fold_matches_legacy_after_vacuum(tmp_path):
     # the baseline exception must deliver v6's full reorganized set
     snaps = [s for s in load_snapshots(p) if s["version"] >= 6]
     write_snapshots(p, snaps)
-    got = _assert_folds_agree(p, tmp_path, "vacuumed")
+    got = _assert_folds_agree(p, "vacuumed")
     assert got == [
         (6, ["ab.colf", "c.colf"]),
         (7, ["d.colf"]),
@@ -108,15 +126,15 @@ def test_incremental_fold_matches_legacy_after_vacuum(tmp_path):
                     staged=True, added=["w2.colf"])                 # v9
     commit_snapshot(p, ["ab.colf", "c.colf", "d.colf", "e.colf",
                         "f.colf"])                                  # v10
-    got = _assert_folds_agree(p, tmp_path, "post-vacuum-appends")
+    got = _assert_folds_agree(p, "post-vacuum-appends")
     assert got[-2:] == [(8, ["e.colf"]), (10, ["f.colf"])]
 
 
 def test_incremental_fold_matches_legacy_long_checkpointed_log(tmp_path):
     """A log long enough to cross checkpoint boundaries (every 20
     commits), with a staged commit and a compaction in the middle —
-    the incremental fold never consults checkpoints, the legacy fold
-    does; they must still agree."""
+    the incremental fold never consults checkpoints, the full
+    materialization does; they must still agree."""
     p = str(tmp_path / "ds")
     os.makedirs(p)
     live = []
@@ -131,14 +149,11 @@ def test_incremental_fold_matches_legacy_long_checkpointed_log(tmp_path):
             continue
         live = live + [f"p{i:03d}.colf"]
         commit_snapshot(p, live)
-    got = _assert_folds_agree(p, tmp_path, "long")
+    got = _assert_folds_agree(p, "long")
     assert len(got) == 44  # 45 commits, one staged
     assert (30, []) in got
-    # cursor expansion parity: the offset-to-file-set expansion both
-    # readers derive from the fold must agree too
-    r2 = ColfStreamReader({"path": p}, StructType([]))
-    r1 = ColfStreamReader(
-        {"path": _v1_clone(p, str(tmp_path / "legacy-exp"))},
-        StructType([]))
+    # cursor expansion parity: the offset-to-file-set expansion the
+    # reader derives from its fold must match the reference expansion
+    r = ColfStreamReader({"path": p}, StructType([]))
     off = {"v": 31, "k": 1}
-    assert r2._offset_files(off) == r1._offset_files(off)
+    assert r._offset_files(off) == _reference_offset_files(p, off)

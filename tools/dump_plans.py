@@ -107,7 +107,6 @@ QUERIES_TO_DUMP = [
     "q180_colf_bucket_transform",
     "q182_colf_sorted_maintenance",
     "q210_sequence_packing",
-    "q213_colf_metadata_migration",
     "q214_colf_stats_planning",
 ]
 
